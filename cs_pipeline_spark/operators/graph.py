@@ -57,8 +57,9 @@ def _edges(docs: DataFrame, n_docs: int) -> DataFrame:
 
 
 def _n_docs(spark: SparkSession, sf_dir: str) -> int:
-    # metadata-scale count used as a literal in the edge synthesis —
-    # parquet footer read, not a data scan
+    # document count used as a literal in the edge synthesis. Not a
+    # footer read: on the V1 parquet source count() runs two jobs (a
+    # scan with partial counts, then the final aggregate)
     return load(spark, "documents", sf_dir).count()
 
 

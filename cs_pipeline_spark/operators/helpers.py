@@ -473,8 +473,9 @@ def literal_df(spark, rows, schema):
     ``spark.createDataFrame`` whenever the rows end up INSIDE a
     returned query plan: a createDataFrame-backed table is a
     Python-RDD scan that re-executes on every downstream action
-    (measured 0.2–0.7 s per action for even a 1-row table — the r10
-    ml_adaboost_stumps finding); a literal projection costs nothing
+    (0.15–0.24 s per action for a 1-row table on 4 cores, 0.2–0.7 s
+    before the ``pyworker`` daemon — the r10 ml_adaboost_stumps
+    finding); a literal projection costs nothing
     after planning. Rows must be few (≤ dozens): each row adds a
     plan node. ``schema`` is a StructType or a DDL string."""
     if isinstance(schema, str):

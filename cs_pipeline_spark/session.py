@@ -12,6 +12,13 @@ one you would set on a 1000-executor cluster too:
   and oracle-comparable.
 - ``parquet.aggregatePushdown`` — MIN/MAX/COUNT served from footer
   statistics when possible (free at any scale).
+- Python worker daemon ``cs_pipeline_spark.pyworker`` — pyspark's own
+  daemon with stamp-checked zip import caches, so a Python task no
+  longer re-reads ``pyspark.zip``/py4j/spark-core on every
+  ``importlib.invalidate_caches()`` (~0.1 s fixed cost per task). The
+  package's parent directory is merged into
+  ``spark.executorEnv.PYTHONPATH`` so workers import the daemon and the
+  operators' pickled functions from any driver working directory.
 """
 
 from __future__ import annotations
@@ -21,6 +28,26 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+
+DAEMON_MODULE = "cs_pipeline_spark.pyworker"
+# directory that holds the ``cs_pipeline_spark`` package
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def worker_conf(extra_conf: dict[str, str] | None = None) -> dict[str, str]:
+    """Python-worker confs, merged with the caller's ``extra_conf``.
+
+    The caller's ``spark.executorEnv.PYTHONPATH`` entries come first and
+    ``PACKAGE_PARENT`` is appended once; every other caller key wins.
+    """
+    conf = dict(extra_conf or {})
+    key = "spark.executorEnv.PYTHONPATH"
+    paths = [p for p in conf.get(key, "").split(os.pathsep) if p]
+    if PACKAGE_PARENT not in paths:
+        paths.append(PACKAGE_PARENT)
+    conf[key] = os.pathsep.join(paths)
+    conf.setdefault("spark.python.daemon.module", DAEMON_MODULE)
+    return conf
 
 
 def get_spark(
@@ -61,6 +88,6 @@ def get_spark(
         # serving many query shapes.
         .config("spark.sql.codegen.cache.maxEntries", "5000")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in worker_conf(extra_conf).items():
         b = b.config(k, v)
     return b.getOrCreate()

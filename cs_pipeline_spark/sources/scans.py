@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import json
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,9 +37,12 @@ from pyspark.sql.types import (
 
 from cs_pipeline_spark.operators import helpers as _h
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.session import PACKAGE_PARENT
 from cs_pipeline_spark.tables import load, nan_to_null
 
-_SCRATCH = "/root/repo/.tmp/sources"
+# scratch inputs live in the checkout that holds the package, so a
+# copy of the repo writes its own
+_SCRATCH = os.path.join(PACKAGE_PARENT, ".tmp", "sources")
 
 
 def _sf_fingerprint(sf_dir: str) -> str:
@@ -122,16 +126,30 @@ def ensure_fixtures(spark: SparkSession, sf_dir: str) -> None:
         # a marker written by an older/partial registration never
         # short-circuits a fuller one
         if not set(names) <= done:
-            ok = True
+            failed: list[str] = []
             for fn in _FIXTURES:
                 try:
                     fn(spark, sf_dir)
-                except Exception:
+                except Exception as e:  # noqa: BLE001 - reported below
                     # partial test dirs (a tempdir carrying one table)
-                    # cannot build every fixture; an op that reads a
-                    # missing fixture still fails loudly at its own scan
-                    ok = False
-            if ok:
+                    # cannot build every fixture; the sweep goes on, and
+                    # an op that reads a missing fixture still fails at
+                    # its own scan
+                    first = (str(e).splitlines() or [""])[0][:200]
+                    failed.append(
+                        f"{fn.__module__}.{fn.__qualname__}: "
+                        f"{type(e).__name__}: {first}"
+                    )
+            if failed:
+                # no marker: the next session retries the failed fixtures
+                warnings.warn(
+                    f"ensure_fixtures({sf_dir}): {len(failed)} fixture(s) "
+                    "failed, no _fixtures_done marker written:\n  "
+                    + "\n  ".join(failed),
+                    RuntimeWarning,
+                    stacklevel=2,
+                )
+            else:
                 with open(marker, "w") as f:
                     f.write("\n".join(sorted(set(names) | done)))
         _ENSURED.add(root)

@@ -13,9 +13,11 @@ Spark's parquet source handles partition discovery + pruning.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -77,19 +79,63 @@ def nan_to_null(df: DataFrame) -> DataFrame:
     return df.select(*cols) if changed else df
 
 
+# confs that change the schema Spark infers from a parquet footer
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+# (path, inference confs) -> (file stamp, schema); a rewritten file
+# replaces its entry, so the cache holds one schema per file and conf set
+_SCHEMAS: dict[tuple, tuple[tuple[int, int, int], StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the file's schema cached.
+
+    Schema inference is a one-task Spark job per call (~0.1 s); a read
+    with the schema given runs none. The cache key is the path, the
+    file's ``(st_ino, st_size, st_mtime_ns)`` stamp and the inference
+    confs, so a rewritten file or a changed conf infers afresh.
+    Directories (partitioned datasets) always infer: a stamp on the
+    directory does not see a rewritten part file. So do paths the
+    local filesystem cannot stat (``s3a://``, ``hdfs://``). Like Spark's
+    FileStatusCache the cache is process-wide and survives
+    ``registry.evict``, which drops plans and pinned data, not file
+    metadata.
+    """
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)  # Spark raises its own error
+    if stat.S_ISDIR(st.st_mode):
+        return spark.read.parquet(path)
+    key = (os.path.abspath(path), tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (stamp, df.schema)
+    return df
+
+
 def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
     """Load one table from an sf directory (file or partitioned dir).
 
     Raw columns pass through untouched so scan-column filters stay
     pushable (see ``nan_to_null`` for why NaN normalization is NOT
-    done here); only ``events.ts`` is type-normalized.
+    done here); only ``events.ts`` is type-normalized. A single-file
+    table's schema is cached (``_read_parquet``), so only the first
+    ``load`` of a file runs Spark's schema-inference job.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         from pyspark.sql.types import LongType, TimestampNTZType
 
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, LongType):
             # legacy nanos file: truncate ns → µs
@@ -99,7 +145,7 @@ def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFr
             # session.py pins it), value-preserving
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(path)
+    return _read_parquet(spark, path)
 
 
 def load_all(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

@@ -1,0 +1,43 @@
+"""sources.scans fixture sweep: failures are reported, not swallowed,
+and scratch inputs live in the checkout that holds the package."""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+
+from cs_pipeline_spark import registry
+from cs_pipeline_spark.sources import scans
+
+
+def test_scratch_lives_in_the_package_checkout():
+    checkout = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    assert scans._SCRATCH == os.path.join(checkout, ".tmp", "sources")
+
+
+def test_failing_fixtures_warn_once_and_leave_no_marker(spark, tmp_path, monkeypatch):
+    # register every real fixture first, so none lands in the stand-in list
+    registry._load_all_modules()
+
+    def _fx_ok(spark, sf_dir):
+        scans._scratch(sf_dir, "ok")  # creates the scratch generation dir
+
+    def _fx_bad(spark, sf_dir):
+        raise ValueError("table missing\nsecond line")
+
+    monkeypatch.setattr(scans, "_FIXTURES", [_fx_ok, _fx_bad])
+    monkeypatch.setattr(scans, "_SCRATCH", str(tmp_path / "scratch"))
+    sf = tmp_path / "sf_partial"
+    sf.mkdir()
+
+    with pytest.warns(RuntimeWarning) as rec:
+        scans.ensure_fixtures(spark, str(sf))
+    assert len(rec) == 1
+    msg = str(rec[0].message)
+    assert f"{_fx_bad.__module__}.{_fx_bad.__qualname__}: ValueError: table missing" in msg
+    assert "second line" not in msg
+    assert "_fx_ok" not in msg
+    root = os.path.dirname(scans._scratch(str(sf), "x"))
+    assert os.path.isdir(root)
+    assert not os.path.exists(os.path.join(root, "_fixtures_done"))
