@@ -112,23 +112,6 @@ ROWS_PER_BAND = N_HASHES // N_BANDS
 JACCARD_THRESHOLD = 0.5
 
 
-def minhash_signature(sh: Column, n_hashes: int = N_HASHES) -> Column:
-    """k minhashes: min over shingles of xxhash64(shingle, seed_j).
-
-    Seeds are Python ints (literal per hash) — see band_keys note on
-    codegen vs interpreted higher-order expressions. Expression-only
-    variant; the hot path uses ``minhash_features`` (Pandas UDF),
-    which benched ~3× faster because Spark's higher-order functions
-    are CodegenFallback (interpreted per element).
-    """
-    return F.array(
-        *[
-            F.array_min(F.transform(sh, lambda s: F.xxhash64(s, F.lit(j))))
-            for j in range(n_hashes)
-        ]
-    )
-
-
 _MASK64 = (1 << 64) - 1
 # Odd multipliers/offsets derived from the golden-ratio & xxhash
 # constants — fixed, deterministic across runs and partitionings.
@@ -375,23 +358,6 @@ def simhash_counts(tokens: Column) -> Column:
         F.array_repeat(F.lit(0), 64),
         lambda acc, t: F.zip_with(acc, bitvec(t), lambda a, x: a + x),
     )
-
-
-def simhash_from_counts(counts: Column) -> Column:
-    """Assemble the fingerprint long from a materialized counts column.
-
-    Keep `counts` as its own projected column first — referencing the
-    aggregate expression 64× would replicate the whole token fold.
-    """
-    fp = F.lit(0).cast("long")
-    for b in range(64):
-        fp = fp.bitwiseOR(
-            F.when(
-                F.element_at(counts, b + 1) >= 0,
-                F.shiftleft(F.lit(1).cast("long"), b),
-            ).otherwise(F.lit(0).cast("long"))
-        )
-    return fp
 
 
 def _make_simhash_udf():

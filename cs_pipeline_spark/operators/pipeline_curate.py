@@ -130,12 +130,6 @@ UNION ALL SELECT 'test', COUNT(*) FROM split WHERE bucket >= 90
 """
 
 
-def _stage_count(df: DataFrame, stage: str) -> DataFrame:
-    return df.agg(F.count(F.lit(1)).alias("n_docs")).select(
-        F.lit(stage).alias("stage"), "n_docs"
-    )
-
-
 @register(
     "curate_corpus_e2e",
     _ORACLE,

@@ -47,14 +47,12 @@ loop).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_ARROW = 4
 _BATCH_ROWS = 57  # deliberate non-divisor → ragged final batches
@@ -483,24 +481,10 @@ def scan_arrow_ipc(spark: SparkSession, sf_dir: str) -> DataFrame:
     body, no per-row Python.
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _AR_COLS)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_AR_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_arrow_file(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.arrow")
-        .load(_scratch(sf_dir, "real_arrow_ipc"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_arrow_ipc"), "*.arrow",
+        decode_arrow_file, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
 
 
 # ---------- the STREAM format (no footer; forward message walk) ----------
@@ -680,21 +664,7 @@ def scan_arrow_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the same numpy-vectorized buffer math as the file variant.
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _AR_COLS)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_AR_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_arrow_stream(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.arrows")
-        .load(_scratch(sf_dir, "real_arrow_stream"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_arrow_stream"), "*.arrows",
+        decode_arrow_stream, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

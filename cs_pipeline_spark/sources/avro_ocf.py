@@ -31,13 +31,12 @@ from __future__ import annotations
 import json
 import struct
 import zlib
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_AVRO = 4
 _ROWS_PER_BLOCK = 64
@@ -357,24 +356,10 @@ def scan_avro_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard Avro input-format behavior this decode mirrors.
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _A_COLS)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_A_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_avro_ocf(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.avro")
-        .load(_scratch(sf_dir, "real_avro_ocf"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_avro_ocf"), "*.avro",
+        decode_avro_ocf, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
 
 
 # ---------- sink: pack documents into REAL Avro OCF shards ----------
@@ -494,35 +479,14 @@ def sink_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         pack, schema="shard long, n long"
     ).count()
 
-    back = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "docs-*.avro")
-        .load(out_dir)
-    )
-
-    def census(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["shard", "n_blocks", "n_rows", "id_sum", "v_chars",
-                "deflate"]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                shard = int(path.rsplit("docs-", 1)[-1].split(".")[0])
-                m = decode_avro_ocf(bytes(content))
-                rows.append({
-                    "shard": shard,
-                    "n_blocks": m["n_blocks"],
-                    "n_rows": m["n_rows"],
-                    "id_sum": m["id_sum"],
-                    "v_chars": m["v_chars"],
-                    "deflate": m["deflate"],
-                })
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    return back.select("path", "content").mapInPandas(
-        census,
-        schema="shard long, n_blocks long, n_rows long, id_sum long, "
+    census = decode_files(
+        spark, out_dir, "docs-*.avro", decode_avro_ocf,
+        "shard string, n_blocks long, n_rows long, id_sum long, "
         "v_chars long, deflate long",
+        name_col="shard",
+    )
+    return census.withColumn(
+        "shard", F.regexp_extract("shard", r"docs-(\d+)\.", 1).cast("long")
     )
 
 
@@ -703,25 +667,7 @@ def scan_avro_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{c} long" for c in _EVO_COLS
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_EVO_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = resolve_avro_evolved(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame({k: [] for k in cols})
-            )
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.avro")
-        .load(_scratch(sf_dir, "real_avro_evo"))
-    )
-    return bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    return decode_files(
+        spark, _scratch(sf_dir, "real_avro_evo"), "*.avro",
+        resolve_avro_evolved, schema,
     )

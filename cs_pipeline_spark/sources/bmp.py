@@ -24,14 +24,12 @@ in the worker, one ~9-column row per file leaves it.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_BMPS = 6
 
@@ -188,21 +186,7 @@ def mm_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row per file out.
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _B_COLS)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_bmp_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            cols = ["fname", *_B_COLS]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.bmp")
-        .load(_scratch(sf_dir, "real_bmps"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_bmps"), "*.bmp",
+        decode_bmp_meta, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

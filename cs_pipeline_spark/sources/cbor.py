@@ -37,13 +37,11 @@ markers), files fan out across executors; the msgpack/JSONL reality.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_CBOR = 4
 _MAX_DEPTH = 32
@@ -429,21 +427,7 @@ def scan_cbor_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     binaryFile; self-delimiting records, split at the file level.
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _CB_COLS)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_CB_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_cbor_stream(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append({k: m[k] for k in cols})
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.cbor")
-        .load(_scratch(sf_dir, "real_cbor"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_cbor"), "*.cbor",
+        decode_cbor_stream, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

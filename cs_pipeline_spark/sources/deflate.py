@@ -44,13 +44,11 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_ZFILES = 4
 _MAX_OUT = 1 << 22  # census bomb guard; fixture max is ~10 KB
@@ -420,23 +418,7 @@ def scan_deflate_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine lives with at 100 TB.
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _Z_COLS)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_Z_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_zlib_multistream(bytes(content))
-                rows.append({
-                    "fname": path.rsplit("/", 1)[-1],
-                    **{k: m[k] for k in _Z_COLS},
-                })
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.zz")
-        .load(_scratch(sf_dir, "real_zlib_streams"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_zlib_streams"), "*.zz",
+        decode_zlib_multistream, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

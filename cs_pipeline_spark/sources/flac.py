@@ -29,13 +29,11 @@ decoded) and only a ~12-column row per file leaves the Python worker.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_FLACS = 8
 _F_RATES = (8000, 16000, 22050, 44100, 48000, 96000, 11025, 32000)
@@ -268,21 +266,7 @@ def mm_decode_flac_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     skipped by length, one row per file out.
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _F_COLS)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_flac_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            cols = ["fname", *_F_COLS]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.flac")
-        .load(_scratch(sf_dir, "real_flacs"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_flacs"), "*.flac",
+        decode_flac_meta, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

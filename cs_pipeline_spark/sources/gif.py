@@ -32,13 +32,11 @@ reads header-proportional bytes (sub-block SIZES, not pixel content).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_GIFS = 8
 
@@ -301,21 +299,7 @@ def mm_decode_gif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per file out; pixel (LZW) bytes skipped, not decoded.
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _G_COLS)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_gif_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(
-                rows, columns=["fname", *_G_COLS]
-            ) if rows else pd.DataFrame({k: [] for k in ["fname", *_G_COLS]})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.gif")
-        .load(_scratch(sf_dir, "real_gifs"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_gifs"), "*.gif",
+        decode_gif_meta, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

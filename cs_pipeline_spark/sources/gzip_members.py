@@ -35,14 +35,12 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
 from cs_pipeline_spark.sources.deflate import inflate
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_GZ = 4
 
@@ -296,21 +294,7 @@ def scan_gzip_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan_cdx_ranged_fetch.
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _GZ_COLS)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_GZ_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_gzip_members(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append({k: m[k] for k in cols})
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.gzm")
-        .load(_scratch(sf_dir, "real_gzip_members"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_gzip_members"), "*.gzm",
+        decode_gzip_members, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

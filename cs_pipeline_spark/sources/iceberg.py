@@ -32,9 +32,7 @@ from __future__ import annotations
 
 import json
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,7 +43,7 @@ from cs_pipeline_spark.sources.avro_ocf import (
     _zz,
     decode_avro_flat,
 )
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_SNAPSHOTS = 4
 _FILES_PER_MANIFEST = 3
@@ -217,25 +215,17 @@ _ICEBERG_ORACLE = f"""
 """
 
 
-def _decode_rows_batches(
-    it: Iterator[pd.DataFrame], cols: list[str]
-) -> Iterator[pd.DataFrame]:
-    """binaryFile batches → one row per decoded Avro record, with the
-    source fname prepended."""
-    for pdf in it:
-        out: list[dict] = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            fname = path.rsplit("/", 1)[-1]
-            names, rows = decode_avro_flat(bytes(content))
-            for r in rows:
-                d = dict(zip(names, r))
-                d["fname"] = fname
-                out.append(d)
-        yield (
-            pd.DataFrame(out, columns=cols)
-            if out
-            else pd.DataFrame({k: [] for k in cols})
-        )
+def _avro_rows(payload: bytes) -> list[dict]:
+    """One row dict per decoded Avro record."""
+    names, rows = decode_avro_flat(payload)
+    return [dict(zip(names, r)) for r in rows]
+
+
+# data-file entries of a manifest (the live-file census reads these)
+_MANIFEST_SCHEMA = (
+    "fname string, status long, seq long, "
+    "file_path string, file_size long, record_count long"
+)
 
 
 @register(
@@ -282,34 +272,13 @@ def scan_iceberg_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    mlists = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "snap-*.avro")
-        .load(md)
-        .select("path", "content")
-        .mapInPandas(
-            lambda it: _decode_rows_batches(
-                it, ["fname", "manifest_path", "added_snapshot_id"]
-            ),
-            schema="fname string, manifest_path string, "
-            "added_snapshot_id long",
-        )
+    mlists = decode_files(
+        spark, md, "snap-*.avro", _avro_rows,
+        "fname string, manifest_path string, added_snapshot_id long",
     )
 
-    manifests = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "manifest-*.avro")
-        .load(md)
-        .select("path", "content")
-        .mapInPandas(
-            lambda it: _decode_rows_batches(
-                it,
-                ["fname", "status", "seq", "file_path",
-                 "file_size", "record_count"],
-            ),
-            schema="fname string, status long, seq long, "
-            "file_path string, file_size long, record_count long",
-        )
+    manifests = decode_files(
+        spark, md, "manifest-*.avro", _avro_rows, _MANIFEST_SCHEMA
     )
 
     # snapshot -> manifest fname map (metadata-sized, broadcast)
@@ -436,20 +405,9 @@ def lake_orphan_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         .json(md)
         .select("path", F.col("size").cast("long").alias("size_bytes"))
     )
-    manifests = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "manifest-*.avro")
-        .load(os.path.join(md, "metadata"))
-        .select("path", "content")
-        .mapInPandas(
-            lambda it: _decode_rows_batches(
-                it,
-                ["fname", "status", "seq", "file_path",
-                 "file_size", "record_count"],
-            ),
-            schema="fname string, status long, seq long, "
-            "file_path string, file_size long, record_count long",
-        )
+    manifests = decode_files(
+        spark, os.path.join(md, "metadata"), "manifest-*.avro",
+        _avro_rows, _MANIFEST_SCHEMA,
     )
     referenced = manifests.select(
         F.col("file_path").alias("path")
@@ -615,20 +573,8 @@ def scan_iceberg_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _scratch(sf_dir, "real_iceberg")
     md = os.path.join(base, "metadata")
 
-    manifests = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "manifest-*.avro")
-        .load(md)
-        .select("path", "content")
-        .mapInPandas(
-            lambda it: _decode_rows_batches(
-                it,
-                ["fname", "status", "seq", "file_path",
-                 "file_size", "record_count"],
-            ),
-            schema="fname string, status long, seq long, "
-            "file_path string, file_size long, record_count long",
-        )
+    manifests = decode_files(
+        spark, md, "manifest-*.avro", _avro_rows, _MANIFEST_SCHEMA
     )
     live = (
         manifests.groupBy("file_path")
@@ -642,30 +588,18 @@ def scan_iceberg_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     del_manifest = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "delete-manifest-*.avro")
-        .load(md)
-        .select("path", "content")
-        .mapInPandas(
-            lambda it: _decode_rows_batches(
-                it, ["fname", "seq", "delete_file", "record_count"]
-            ),
-            schema="fname string, seq long, delete_file string, "
+        decode_files(
+            spark, md, "delete-manifest-*.avro", _avro_rows,
+            "fname string, seq long, delete_file string, "
             "record_count long",
         )
         .select(F.col("delete_file").alias("dfname"),
                 F.col("seq").alias("del_seq"))
     )
     del_rows = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "del-*.avro")
-        .load(os.path.join(base, "deletes"))
-        .select("path", "content")
-        .mapInPandas(
-            lambda it: _decode_rows_batches(
-                it, ["fname", "file_path", "pos"]
-            ),
-            schema="fname string, file_path string, pos long",
+        decode_files(
+            spark, os.path.join(base, "deletes"), "del-*.avro",
+            _avro_rows, "fname string, file_path string, pos long",
         )
         .join(F.broadcast(del_manifest),
               F.col("fname") == F.col("dfname"))

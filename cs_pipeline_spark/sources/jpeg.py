@@ -26,13 +26,11 @@ header prefix (S3 range requests in a real deployment) — the plan
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_IMGS = 8
 
@@ -266,30 +264,6 @@ _COLS = (
 ).split()
 
 
-def decode_jpeg_df(spark: SparkSession, jpg_dir: str) -> DataFrame:
-    schema = "fname string, " + ", ".join(f"{c} long" for c in _COLS)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_jpeg_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(
-                rows, columns=["fname", *_COLS]
-            ) if rows else pd.DataFrame(
-                {k: [] for k in ["fname", *_COLS]}
-            )
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.jpg")
-        .load(jpg_dir)
-    )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
-
-
 _JPEG_ORACLE = f"""
     WITH imgs AS (SELECT unnest(range(0, {_N_IMGS})) AS i)
     SELECT printf('img-%03d.jpg', CAST(i AS INT)) AS fname,
@@ -336,8 +310,10 @@ def mm_decode_jpeg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: see module docstring — header-prefix reads parallelize
     per file; no pixel data ever leaves the scan.
     """
-    return decode_jpeg_df(spark, _scratch(sf_dir, "real_jpegs")).select(
-        "fname", *_COLS
+    schema = "fname string, " + ", ".join(f"{c} long" for c in _COLS)
+    return decode_files(
+        spark, _scratch(sf_dir, "real_jpegs"), "*.jpg", decode_jpeg_meta,
+        schema,
     )
 
 
@@ -694,24 +670,10 @@ def mm_decode_jpeg_dc(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats row per file leaves the worker.
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _DC_COLS)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_jpeg_dc(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(
-                rows, columns=["fname", *_DC_COLS]
-            ) if rows else pd.DataFrame({k: [] for k in ["fname", *_DC_COLS]})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.jpg")
-        .load(_scratch(sf_dir, "real_jpegs_dc"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_jpegs_dc"), "*.jpg",
+        decode_jpeg_dc, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
 
 
 # ---------- EXIF GPS sub-IFD parse (location-PII detection) ----------
@@ -920,8 +882,6 @@ def _fx_jpeg_gps_imgs(spark: SparkSession, sf_dir: str) -> None:
     write_jpeg_gps_fixtures(_scratch(sf_dir, "real_jpegs_gps"))
 
 
-_GPS_COLS = "has_gps lat_udeg lon_udeg orientation".split()
-
 _JPEG_GPS_ORACLE = f"""
     WITH imgs AS (SELECT unnest(range(0, {_N_GPS_IMGS})) AS i),
     m AS (
@@ -982,20 +942,7 @@ def mm_exif_gps(spark: SparkSession, sf_dir: str) -> DataFrame:
         "orientation long"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_jpeg_gps(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(
-                rows, columns=["fname", *_GPS_COLS]
-            ) if rows else pd.DataFrame({k: [] for k in ["fname", *_GPS_COLS]})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.jpg")
-        .load(_scratch(sf_dir, "real_jpegs_gps"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_jpegs_gps"), "*.jpg",
+        decode_jpeg_gps, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

@@ -27,13 +27,10 @@ frames, not bytes — and one ~8-column row per file leaves the worker.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_MP3S = 8
 # MPEG-1 Layer III bitrate table (kbps), index 1..14; 0 = free, 15 = bad
@@ -245,24 +242,10 @@ def mm_decode_mp3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes per frame, one row per file out.
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _P_COLS)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_mp3_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            cols = ["fname", *_P_COLS]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mp3")
-        .load(_scratch(sf_dir, "real_mp3s"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_mp3s"), "*.mp3",
+        decode_mp3_meta, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
 
 
 # ====================================================================
@@ -428,30 +411,18 @@ def mm_id3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fname string, title string, artist string, album string, "
         "year_ long, n_frames long"
     )
-    cols = ["fname", "title", "artist", "album", "year_", "n_frames"]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_mp3_id3(bytes(content))
-                t = m["tags"]
-                rows.append({
-                    "fname": path.rsplit("/", 1)[-1],
-                    "title": t.get("TIT2"),
-                    "artist": t.get("TPE1"),
-                    "album": t.get("TALB"),
-                    "year_": int(t["TYER"]) if "TYER" in t else None,
-                    "n_frames": m["n_frames"],
-                })
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
+    def tag_row(payload: bytes) -> dict:
+        m = decode_mp3_id3(payload)
+        t = m["tags"]
+        return {
+            "title": t.get("TIT2"),
+            "artist": t.get("TPE1"),
+            "album": t.get("TALB"),
+            "year_": int(t["TYER"]) if "TYER" in t else None,
+            "n_frames": m["n_frames"],
+        }
 
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mp3")
-        .load(_scratch(sf_dir, "real_mp3_id3"))
-    )
-    return bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    return decode_files(
+        spark, _scratch(sf_dir, "real_mp3_id3"), "*.mp3", tag_row, schema
     )

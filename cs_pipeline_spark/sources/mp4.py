@@ -34,14 +34,12 @@ production probers avoid touching the media payload at all.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_MP4S = 8
 _FRAME_K = 4  # frames sampled per video by mm_frame_sample_decoded
@@ -359,30 +357,11 @@ _MP4_FORMULA = f"""
     FROM (SELECT unnest(range(0, {_N_MP4S})) AS i)
 """
 
-_M_COLS = ["major_brand", "video_codec", *_M_INT_COLS]
-
 
 def decode_mp4_df(spark: SparkSession, fdir: str) -> DataFrame:
     schema = "fname string, major_brand string, video_codec string, " + \
         ", ".join(f"{c} long" for c in _M_INT_COLS)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_mp4_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            cols = ["fname", *_M_COLS]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mp4")
-        .load(fdir)
-    )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
+    return decode_files(spark, fdir, "*.mp4", decode_mp4_meta, schema)
 
 
 @register(
@@ -599,33 +578,17 @@ def mm_video_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     schema = "fname string, s long, size long, is_key long"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                keys, sizes = decode_mp4_gop(bytes(content))
-                kset = set(keys)
-                fname = path.rsplit("/", 1)[-1]
-                for s, sz in enumerate(sizes, start=1):
-                    rows.append(
-                        {
-                            "fname": fname,
-                            "s": s,
-                            "size": sz,
-                            "is_key": 1 if s in kset else 0,
-                        }
-                    )
-            cols = ["fname", "s", "size", "is_key"]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
+    def sample_rows(payload: bytes) -> list[dict]:
+        keys, sizes = decode_mp4_gop(payload)
+        kset = set(keys)
+        return [
+            {"s": s, "size": sz, "is_key": 1 if s in kset else 0}
+            for s, sz in enumerate(sizes, start=1)
+        ]
 
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mp4")
-        .load(_scratch(sf_dir, "real_mp4s_gop"))
-    )
-    samples = bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    samples = decode_files(
+        spark, _scratch(sf_dir, "real_mp4s_gop"), "*.mp4", sample_rows,
+        schema,
     )
     w = (
         Window.partitionBy("fname")
@@ -942,28 +905,11 @@ def mm_video_keyframe_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_blocks long, mean_sum long, mean_min long, mean_max long, "
         "is_blank long"
     )
-    cols = [
-        "fname", "sample_idx", "width", "height", "n_blocks",
-        "mean_sum", "mean_min", "mean_max", "is_blank",
-    ]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                fname = path.rsplit("/", 1)[-1]
-                for r in decode_mp4_keyframe_pixels(bytes(content)):
-                    r["fname"] = fname
-                    rows.append(r)
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mp4")
-        .load(_scratch(sf_dir, "real_mp4s_mjpeg"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_mp4s_mjpeg"), "*.mp4",
+        decode_mp4_keyframe_pixels, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
 
 
 # ====================================================================
@@ -1353,25 +1299,11 @@ def mm_video_sps_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fname string, profile_idc long, level_idc long, width long, "
         "height long, n_sps long, length_size long"
     )
-    cols = ["fname", "profile_idc", "level_idc", "width", "height",
-            "n_sps", "length_size"]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_mp4_sps_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mp4")
-        .load(_scratch(sf_dir, "real_mp4s_avc"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_mp4s_avc"), "*.mp4",
+        decode_mp4_sps_meta, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
 
 
 # ====================================================================
@@ -1677,22 +1609,8 @@ def mm_video_hevc_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "level_idc long, width long, height long, bit_depth long, "
         "length_size long"
     )
-    cols = ["fname", "tier_flag", "profile_idc", "level_idc",
-            "width", "height", "bit_depth", "length_size"]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_mp4_hevc_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mp4")
-        .load(_scratch(sf_dir, "real_mp4s_hevc"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_mp4s_hevc"), "*.mp4",
+        decode_mp4_hevc_meta, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

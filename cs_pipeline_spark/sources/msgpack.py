@@ -31,13 +31,11 @@ across executors; the Fluentd/Kafka-archive reality at 100 TB.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_MSGPACK = 4
 _MAX_DEPTH = 32
@@ -398,21 +396,7 @@ def scan_msgpack_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     layer (WARC-style), which is exactly how log archives wrap it.
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _MP_COLS)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_MP_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_msgpack_stream(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.msgpack")
-        .load(_scratch(sf_dir, "real_msgpack"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_msgpack"), "*.msgpack",
+        decode_msgpack_stream, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

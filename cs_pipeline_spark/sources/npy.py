@@ -29,14 +29,12 @@ from __future__ import annotations
 
 import ast
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_NPYS = 6
 _DTYPES = ("<i8", "<i4", "<i2")
@@ -78,12 +76,6 @@ def encode_npy(i: int) -> bytes:
     out += hdr_bytes
     out += arr.tobytes(order="F" if m["fortran"] else "C")
     return out
-
-
-_N_COLS = (
-    "major dtype rows cols fortran n_elems val_sum val_min val_max "
-    "checksum"
-).split()
 
 
 def decode_npy_meta(payload: bytes) -> dict:
@@ -232,20 +224,7 @@ def scan_npy_header(spark: SparkSession, sf_dir: str) -> DataFrame:
         "val_max long, checksum long"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_npy_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            cols = ["fname", *_N_COLS]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.npy")
-        .load(_scratch(sf_dir, "real_npys"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_npys"), "*.npy",
+        decode_npy_meta, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

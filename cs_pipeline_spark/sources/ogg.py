@@ -32,13 +32,11 @@ throughput beats integrity).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_OGGS = 6
 _OPUS_CLOCK = 48000
@@ -288,21 +286,7 @@ def mm_decode_ogg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     for header-only probes.
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _O_COLS)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_ogg_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            cols = ["fname", *_O_COLS]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.opus")
-        .load(_scratch(sf_dir, "real_oggs"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_oggs"), "*.opus",
+        decode_ogg_meta, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

@@ -31,13 +31,10 @@ production property that lets a 100 TB lake audit run in minutes.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_PQ = 4
 _MAX_DEPTH = 24
@@ -331,25 +328,8 @@ def scan_parquet_footer(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fname string, row_group long, num_rows long, n_chunks long, "
         "values_total long, n_snappy_chunks long"
     )
-    cols = [
-        "fname", "row_group", "num_rows", "n_chunks", "values_total",
-        "n_snappy_chunks",
-    ]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                fname = path.rsplit("/", 1)[-1]
-                for r in decode_parquet_footer(bytes(content)):
-                    r["fname"] = fname
-                    rows.append(r)
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "tbl-*.parquet")
-        .load(_scratch(sf_dir, "real_parquet_tbls"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_parquet_tbls"), "tbl-*.parquet",
+        decode_parquet_footer, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

@@ -25,9 +25,6 @@ no shuffle. Malformed input raises ValueError only
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
@@ -41,7 +38,7 @@ from cs_pipeline_spark.sources.parquet_pages import (
     _read_strlist,
     _read_struct_h,
 )
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_PIDX = 4
 _PAGE_ROWS = 100  # write_batch_size — every page is exactly 100 rows
@@ -292,26 +289,7 @@ def scan_parquet_page_index(
         f"{c} long" for c in _PI_COLS
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", "col", *_PI_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                fname = path.rsplit("/", 1)[-1]
-                for m in decode_parquet_page_index(bytes(content)):
-                    m["fname"] = fname
-                    rows.append(m)
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame({k: [] for k in cols})
-            )
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.parquet")
-        .load(_scratch(sf_dir, "real_parquet_pageidx"))
-    )
-    return bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    return decode_files(
+        spark, _scratch(sf_dir, "real_parquet_pageidx"), "*.parquet",
+        decode_parquet_page_index, schema,
     )

@@ -29,9 +29,6 @@ Malformed input raises ValueError only (tests/test_parser_fuzz.py).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
@@ -44,7 +41,7 @@ from cs_pipeline_spark.sources.parquet_footer import (
     _read_i,
     _read_list_of_structs,
 )
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 
 def snappy_decompress(buf: bytes) -> bytes:
@@ -456,6 +453,7 @@ def _walk_column_pages(
         "n_data_pages": n_data,
         "rows_decoded": rows_dec,
         "rows_footer": fm[3],
+        "rows_match": 1 if rows_dec == fm[3] else 0,
     }
 
 
@@ -544,30 +542,9 @@ def scan_parquet_data_pages(
         f"{c} long" for c in _PP_COLS
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_PP_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_parquet_column_pages(bytes(content))
-                m["rows_match"] = (
-                    1 if m["rows_decoded"] == m["rows_footer"] else 0
-                )
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame({k: [] for k in cols})
-            )
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.parquet")
-        .load(_scratch(sf_dir, "real_parquet_tbls"))
-    )
-    return bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    return decode_files(
+        spark, _scratch(sf_dir, "real_parquet_tbls"), "*.parquet",
+        decode_parquet_column_pages, schema,
     )
 
 
@@ -702,28 +679,9 @@ def scan_parquet_col_stats(
         f"{c} long" for c in _ST_COLS
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_ST_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                fname = path.rsplit("/", 1)[-1]
-                for m in decode_parquet_col_stats(bytes(content)):
-                    m["fname"] = fname
-                    rows.append(m)
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame({k: [] for k in cols})
-            )
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.parquet")
-        .load(_scratch(sf_dir, "real_parquet_tbls"))
-    )
-    return bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    return decode_files(
+        spark, _scratch(sf_dir, "real_parquet_tbls"), "*.parquet",
+        decode_parquet_col_stats, schema,
     )
 
 
@@ -779,30 +737,9 @@ def scan_parquet_string_pages(
         f"{c} long" for c in _SP_COLS
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_SP_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_parquet_string_pages(bytes(content))
-                m["rows_match"] = (
-                    1 if m["rows_decoded"] == m["rows_footer"] else 0
-                )
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame({k: [] for k in cols})
-            )
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.parquet")
-        .load(_scratch(sf_dir, "real_parquet_tbls"))
-    )
-    return bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    return decode_files(
+        spark, _scratch(sf_dir, "real_parquet_tbls"), "*.parquet",
+        decode_parquet_string_pages, schema,
     )
 
 
@@ -897,28 +834,7 @@ def scan_parquet_lz4_pages(
         f"{c} long" for c in _PP_COLS
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_PP_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_parquet_column_pages(bytes(content))
-                m["rows_match"] = (
-                    1 if m["rows_decoded"] == m["rows_footer"] else 0
-                )
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame({k: [] for k in cols})
-            )
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.parquet")
-        .load(_scratch(sf_dir, "real_parquet_lz4"))
-    )
-    return bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    return decode_files(
+        spark, _scratch(sf_dir, "real_parquet_lz4"), "*.parquet",
+        decode_parquet_column_pages, schema,
     )

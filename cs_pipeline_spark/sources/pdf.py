@@ -30,13 +30,11 @@ reads per document regardless of document size.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_PDFS = 8
 
@@ -279,24 +277,10 @@ def mm_decode_pdf_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     structure-proportional at any document size.
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _P_COLS)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_pdf_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            cols = ["fname", *_P_COLS]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(_scratch(sf_dir, "real_pdfs"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_pdfs"), "*.pdf",
+        decode_pdf_meta, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
 
 
 # ====================================================================
@@ -707,21 +691,7 @@ def text_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_kern_spaces long"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", "page", "text", "n_chars", "n_kern_spaces"]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                fname = path.rsplit("/", 1)[-1]
-                for r in extract_pdf_text(bytes(content)):
-                    r["fname"] = fname
-                    rows.append(r)
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(_scratch(sf_dir, "real_pdfs_text"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_pdfs_text"), "*.pdf",
+        extract_pdf_text, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

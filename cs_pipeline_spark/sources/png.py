@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -453,40 +453,30 @@ def mm_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from cs_pipeline_spark.registry import pin
 
-    def dhash_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            names: list[str] = []
-            dhs: list[int] = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                w, h, ch, vals = decode_png(bytes(content))
-                a = np.asarray(vals, dtype=np.int64).reshape(h, w, ch)
-                if ch == 1:
-                    lum = a[:, :, 0]
-                else:
-                    wts = np.array([299, 587, 114], dtype=np.int64)
-                    lum = (a * wts).sum(axis=2) // 1000
-                ys = (np.arange(_DH_G) * h) // _DH_G
-                xs = (np.arange(_DH_G) * w) // _DH_G
-                ls = lum[np.ix_(ys, xs)]
-                bits = (ls[:, 1:] > ls[:, :-1]).astype(np.int64)
-                sh = (
-                    np.arange(_DH_G)[:, None] * (_DH_G - 1)
-                    + np.arange(_DH_G - 1)[None, :]
-                )
-                names.append(path.rsplit("/", 1)[-1])
-                dhs.append(int((bits << sh).sum()))
-            yield pd.DataFrame({"fname": names, "dh": dhs})
+    def dhash_row(payload: bytes) -> dict:
+        w, h, ch, vals = decode_png(payload)
+        a = np.asarray(vals, dtype=np.int64).reshape(h, w, ch)
+        if ch == 1:
+            lum = a[:, :, 0]
+        else:
+            wts = np.array([299, 587, 114], dtype=np.int64)
+            lum = (a * wts).sum(axis=2) // 1000
+        ys = (np.arange(_DH_G) * h) // _DH_G
+        xs = (np.arange(_DH_G) * w) // _DH_G
+        ls = lum[np.ix_(ys, xs)]
+        bits = (ls[:, 1:] > ls[:, :-1]).astype(np.int64)
+        sh = (
+            np.arange(_DH_G)[:, None] * (_DH_G - 1)
+            + np.arange(_DH_G - 1)[None, :]
+        )
+        return {"dh": int((bits << sh).sum())}
 
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.png")
-        .load(_scratch(sf_dir, "real_pngs"))
-    )
     # pinned: both sides of the bounded self-join read this 6-row
     # frame — without the pin the decode map executes twice per action
     hashes = pin(
-        bf.select("path", "content").mapInPandas(
-            dhash_batches, schema="fname string, dh long"
+        decode_files(
+            spark, _scratch(sf_dir, "real_pngs"), "*.png", dhash_row,
+            "fname string, dh long",
         )
     )
     a = hashes.select(
@@ -699,39 +689,22 @@ def mm_png_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fname string, n_text long, n_ztxt long, n_itxt long, "
         "ai_generated long, text_chars long, keywords string"
     )
-    cols = ["fname", "n_text", "n_ztxt", "n_itxt", "ai_generated",
-            "text_chars", "keywords"]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                texts = decode_png_text(bytes(content))
-                rows.append({
-                    "fname": path.rsplit("/", 1)[-1],
-                    "n_text": sum(1 for t in texts
-                                  if t["kind"] == "tEXt"),
-                    "n_ztxt": sum(1 for t in texts
-                                  if t["kind"] == "zTXt"),
-                    "n_itxt": sum(1 for t in texts
-                                  if t["kind"] == "iTXt"),
-                    "ai_generated": 1 if any(
-                        t["keyword"] == "parameters"
-                        and "Steps:" in t["text"] for t in texts
-                    ) else 0,
-                    "text_chars": sum(len(t["text"]) for t in texts),
-                    "keywords": ",".join(
-                        sorted(t["keyword"] for t in texts)
-                    ),
-                })
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
+    def census_row(payload: bytes) -> dict:
+        texts = decode_png_text(payload)
+        return {
+            "n_text": sum(1 for t in texts if t["kind"] == "tEXt"),
+            "n_ztxt": sum(1 for t in texts if t["kind"] == "zTXt"),
+            "n_itxt": sum(1 for t in texts if t["kind"] == "iTXt"),
+            "ai_generated": 1 if any(
+                t["keyword"] == "parameters" and "Steps:" in t["text"]
+                for t in texts
+            ) else 0,
+            "text_chars": sum(len(t["text"]) for t in texts),
+            "keywords": ",".join(sorted(t["keyword"] for t in texts)),
+        }
 
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.png")
-        .load(_scratch(sf_dir, "real_png_prov"))
-    )
-    return bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    return decode_files(
+        spark, _scratch(sf_dir, "real_png_prov"), "*.png", census_row,
+        schema,
     )

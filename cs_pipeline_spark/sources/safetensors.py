@@ -32,13 +32,11 @@ from __future__ import annotations
 
 import json
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_STS = 6
 _DTYPES = (("F32", 4), ("F16", 2), ("I8", 1))
@@ -236,22 +234,7 @@ def scan_safetensors_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "params long, bytes long, offset long"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                fname = path.rsplit("/", 1)[-1]
-                for t in decode_safetensors_meta(bytes(content)):
-                    t["fname"] = fname
-                    rows.append(t)
-            cols = ["fname", "name", "dtype", "rank", "params",
-                    "bytes", "offset"]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.safetensors")
-        .load(_scratch(sf_dir, "real_safetensors"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_safetensors"), "*.safetensors",
+        decode_safetensors_meta, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

@@ -23,7 +23,9 @@ from __future__ import annotations
 import json
 import os
 import warnings
+from collections.abc import Callable, Iterable, Iterator
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -72,6 +74,61 @@ def _scratch(sf_dir: str, name: str) -> str:
     path = os.path.join(_SCRATCH, f"{tag}-{_sf_fingerprint(sf_dir)}", name)
     os.makedirs(os.path.dirname(path), exist_ok=True)
     return path
+
+
+def decode_files(
+    spark: SparkSession,
+    src_dir: str,
+    glob: str,
+    decode: Callable[[bytes], dict | Iterable[dict]],
+    schema: str,
+    *,
+    name_col: str = "fname",
+) -> DataFrame:
+    """binaryFile scan of ``src_dir`` (files matching ``glob``) →
+    mapInPandas decode → rows in ``schema``: the ingestion boundary
+    the format decoders share.
+
+    ``decode(content)`` returns one row dict or an iterable of row
+    dicts; each row gets the file's base name (never the machine-local
+    path) in ``name_col``. Rows are framed in ``schema``'s column
+    order — keys outside it are dropped, missing ones are null — one
+    frame per input Arrow batch, so an empty batch yields the declared
+    columns with no rows. ``schema`` is parsed once, here, and the
+    parsed type goes to ``mapInPandas``.
+
+    Malformed input fails the op: a ``ValueError`` from ``decode`` is
+    re-raised as ``ValueError("<file name>: <message>")`` so the
+    failure names its file; any other exception propagates as is.
+
+    Scale: per-file map work, no shuffle; a directory of files splits
+    by file, so decode parallelism is the file count.
+    """
+    struct = StructType.fromDDL(schema)
+    cols = struct.fieldNames()
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows: list[dict] = []
+            for path, content in zip(pdf["path"], pdf["content"]):
+                fname = path.rsplit("/", 1)[-1]
+                try:
+                    out = decode(bytes(content))
+                    got = [out] if isinstance(out, dict) else list(out)
+                except ValueError as e:
+                    raise ValueError(f"{fname}: {e}") from e
+                for row in got:
+                    row[name_col] = fname
+                rows.extend(got)
+            yield pd.DataFrame(rows, columns=cols)
+
+    return (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", glob)
+        .load(src_dir)
+        .select("path", "content")
+        .mapInPandas(batches, schema=struct)
+    )
 
 
 # ---------- fixture materialization (setup-time, NOT builder-time) ----------

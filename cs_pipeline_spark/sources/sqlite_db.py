@@ -49,11 +49,10 @@ from __future__ import annotations
 import struct
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_SQLITE = 4
 _PAGE_SIZE = 1024
@@ -386,21 +385,7 @@ def scan_sqlite_db(spark: SparkSession, sf_dir: str) -> DataFrame:
     is across files, never within one.
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _SQ_COLS)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_SQ_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_sqlite_db(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append({k: m[k] for k in cols})
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.db")
-        .load(_scratch(sf_dir, "real_sqlite_db"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_sqlite_db"), "*.db",
+        decode_sqlite_db, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

@@ -29,13 +29,11 @@ payloads themselves.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_TARS = 6
 _EXTS = ("txt", "cls", "bin")
@@ -231,25 +229,10 @@ def scan_tar_members(spark: SparkSession, sf_dir: str) -> DataFrame:
         "offset_blocks long"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                shard = path.rsplit("/", 1)[-1]
-                for m in decode_tar_members(bytes(content)):
-                    m["shard"] = shard
-                    rows.append(m)
-            cols = ["shard", "name", "size", "data_blocks",
-                    "offset_blocks"]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tar")
-        .load(_scratch(sf_dir, "real_tars"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_tars"), "*.tar",
+        decode_tar_members, schema, name_col="shard",
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
 
 
 # ---------- WebDataset sample assembly over the member index ----------
@@ -396,33 +379,20 @@ def sink_wds_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         pack, schema="shard long, n long"
     ).count()
 
-    back = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tar")
-        .load(out_dir)
-    )
+    def census_row(payload: bytes) -> dict:
+        ms = decode_tar_members(payload)
+        return {
+            "n_members": len(ms),
+            "payload_bytes": sum(m["size"] for m in ms),
+            "max_member_bytes": max(m["size"] for m in ms),
+        }
 
-    def census(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                shard = int(path.rsplit("wds-", 1)[-1].split(".")[0])
-                ms = decode_tar_members(bytes(content))
-                rows.append(
-                    {
-                        "shard": shard,
-                        "n_members": len(ms),
-                        "payload_bytes": sum(m["size"] for m in ms),
-                        "max_member_bytes": max(m["size"] for m in ms),
-                    }
-                )
-            cols = ["shard", "n_members", "payload_bytes",
-                    "max_member_bytes"]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    return back.select("path", "content").mapInPandas(
-        census,
-        schema="shard long, n_members long, payload_bytes long, "
+    census = decode_files(
+        spark, out_dir, "*.tar", census_row,
+        "shard string, n_members long, payload_bytes long, "
         "max_member_bytes long",
+        name_col="shard",
+    )
+    return census.withColumn(
+        "shard", F.regexp_extract("shard", r"wds-(\d+)\.", 1).cast("long")
     )

@@ -32,13 +32,11 @@ integrity check IS the point; skip it for header-only probes).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_TFRS = 6
 
@@ -190,21 +188,7 @@ def scan_tfrecord_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass; one census row per shard out.
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _T_COLS)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_tfrecord_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            cols = ["fname", *_T_COLS]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tfrecord")
-        .load(_scratch(sf_dir, "real_tfrecords"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_tfrecords"), "*.tfrecord",
+        decode_tfrecord_meta, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

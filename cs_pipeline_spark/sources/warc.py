@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_WARCS = 6
 
@@ -294,24 +294,10 @@ def scan_warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     census row per shard out.
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _W_COLS)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_warc_records(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            cols = ["fname", *_W_COLS]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc")
-        .load(_scratch(sf_dir, "real_warcs"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_warcs"), "*.warc",
+        decode_warc_records, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
 
 
 # ====================================================================
@@ -447,24 +433,10 @@ def scan_warc_gz_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols = ["n_records", "n_200", "html_bytes", "payload_bytes",
             "n_gzip_members"]
     schema = "fname string, " + ", ".join(f"{c} long" for c in cols)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out_cols = ["fname", *cols]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_warc_records(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append({k: m[k] for k in out_cols})
-            yield pd.DataFrame(rows, columns=out_cols) if rows else \
-                pd.DataFrame({k: [] for k in out_cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "mix-*.warc*")
-        .load(_scratch(sf_dir, "real_warcs_gz"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_warcs_gz"), "mix-*.warc*",
+        decode_warc_records, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
 
 
 # ====================================================================

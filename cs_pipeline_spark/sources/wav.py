@@ -32,15 +32,13 @@ chunk plan (``mm_audio_chunk_decoded``) with per-chunk decode.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_WAVS = 8
 _RATES = (8000, 16000, 22050, 44100)
@@ -210,24 +208,7 @@ def _fx_wav_clips(spark: SparkSession, sf_dir: str) -> None:
 
 def decode_wav_df(spark: SparkSession, wav_dir: str) -> DataFrame:
     schema = "fname string, " + ", ".join(f"{c} long" for c in _STAT_COLS)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_wav(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(
-                rows, columns=["fname", *_STAT_COLS]
-            ) if rows else pd.DataFrame({k: [] for k in ["fname", *_STAT_COLS]})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wav")
-        .load(wav_dir)
-    )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
+    return decode_files(spark, wav_dir, "*.wav", decode_wav, schema)
 
 
 # formula meta, shared by both oracles
@@ -526,26 +507,10 @@ def mm_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap-merge shape.
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _E_COLS)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            frames = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                rows = decode_wav_frames(bytes(content))
-                fname = path.rsplit("/", 1)[-1]
-                for r in rows:
-                    r["fname"] = fname
-                frames.extend(rows)
-            yield pd.DataFrame(
-                frames, columns=["fname", *_E_COLS]
-            ) if frames else pd.DataFrame({k: [] for k in ["fname", *_E_COLS]})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wav")
-        .load(_scratch(sf_dir, "real_wavs_energy"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_wavs_energy"), "*.wav",
+        decode_wav_frames, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
 
 
 # ---------- silence-run census / trim points over decoded PCM ----------
@@ -702,29 +667,10 @@ def mm_audio_silence_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     schema = "fname string, frame_idx long, is_silence long"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            frames = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                fname = path.rsplit("/", 1)[-1]
-                for r in decode_wav_frames(bytes(content)):
-                    frames.append(
-                        {
-                            "fname": fname,
-                            "frame_idx": r["frame_idx"],
-                            "is_silence": r["is_silence"],
-                        }
-                    )
-            cols = ["fname", "frame_idx", "is_silence"]
-            yield pd.DataFrame(frames, columns=cols) if frames else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wav")
-        .load(_scratch(sf_dir, "real_wavs_silence"))
+    flags = decode_files(
+        spark, _scratch(sf_dir, "real_wavs_silence"), "*.wav",
+        decode_wav_frames, schema,
     )
-    flags = bf.select("path", "content").mapInPandas(batches, schema=schema)
     tot = flags.groupBy("fname").agg(
         F.count("*").alias("n_windows"),
         F.sum("is_silence").alias("silent_windows"),
@@ -925,21 +871,7 @@ def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "e_b64 double, centroid double"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", "frame", "e_b4", "e_b16", "e_b64", "centroid"]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                fname = path.rsplit("/", 1)[-1]
-                for r in wav_spectral_rows(bytes(content)):
-                    r["fname"] = fname
-                    rows.append(r)
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wav")
-        .load(_scratch(sf_dir, "real_wavs"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_wavs"), "*.wav",
+        wav_spectral_rows, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

@@ -25,13 +25,11 @@ Scale: per-file mapInPandas header parse; one row per file out.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 from cs_pipeline_spark.sources.wav import _chunk
 
 _N_WEBPS = 9
@@ -230,20 +228,7 @@ def mm_decode_webp_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "has_alpha long, has_anim long, n_chunks long"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_webp_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(
-                rows, columns=["fname", *_W_COLS]
-            ) if rows else pd.DataFrame({k: [] for k in ["fname", *_W_COLS]})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.webp")
-        .load(_scratch(sf_dir, "real_webps"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_webps"), "*.webp",
+        decode_webp_meta, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

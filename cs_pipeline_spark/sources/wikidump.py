@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_DUMPS = 4
 _PAGES_PER_STREAM = 5
@@ -350,28 +350,15 @@ def text_wiki_markup_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     schema = "fname string, pid long, wikitext string"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", "pid", "wikitext"]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                fname = path.rsplit("/", 1)[-1]
-                for pid, text in decode_wikidump_pages(bytes(content)):
-                    rows.append({
-                        "fname": fname,
-                        "pid": pid,
-                        "wikitext": text.decode(),
-                    })
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
+    def page_rows(payload: bytes) -> list[dict]:
+        return [
+            {"pid": pid, "wikitext": text.decode()}
+            for pid, text in decode_wikidump_pages(payload)
+        ]
 
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.xml.bz2")
-        .load(_scratch(sf_dir, "real_wikidumps"))
-    )
-    pages = bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    pages = decode_files(
+        spark, _scratch(sf_dir, "real_wikidumps"), "*.xml.bz2",
+        page_rows, schema,
     )
     plain = F.regexp_replace(
         F.regexp_replace(

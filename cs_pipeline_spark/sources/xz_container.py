@@ -42,13 +42,11 @@ import hashlib
 import lzma
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_XZ = 4
 _MAX_OUT = 1 << 24
@@ -379,21 +377,7 @@ def scan_xz_container(spark: SparkSession, sf_dir: str) -> DataFrame:
     splittable archive format at 100 TB.
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _XZ_COLS)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_XZ_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_xz_container(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.xz")
-        .load(_scratch(sf_dir, "real_xz_container"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_xz_container"), "*.xz",
+        decode_xz_container, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

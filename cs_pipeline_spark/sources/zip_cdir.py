@@ -41,14 +41,12 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
 from cs_pipeline_spark.sources.deflate import inflate
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_ZIP = 4
 
@@ -262,21 +260,7 @@ def scan_zip_central_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-file split index; member extraction fans out by offset.
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _ZC_COLS)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_ZC_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_zip_cdir(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append({k: m[k] for k in cols})
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.zip")
-        .load(_scratch(sf_dir, "real_zip_cdir"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_zip_cdir"), "*.zip",
+        decode_zip_cdir, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

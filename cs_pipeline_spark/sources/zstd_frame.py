@@ -27,13 +27,10 @@ random access needed. Malformed input raises ValueError only
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.sources.scans import _fixture, _scratch
+from cs_pipeline_spark.sources.scans import _fixture, _scratch, decode_files
 
 _N_ZST = 4
 _ZSTD_MAGIC = bytes.fromhex("28b52ffd")  # 0xFD2FB528 little-endian
@@ -250,27 +247,9 @@ def scan_zstd_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{c} long" for c in _ZS_COLS
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_ZS_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_zstd_frame(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame({k: [] for k in cols})
-            )
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.zst")
-        .load(_scratch(sf_dir, "real_zstd"))
-    )
-    return bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    return decode_files(
+        spark, _scratch(sf_dir, "real_zstd"), "*.zst",
+        decode_zstd_frame, schema,
     )
 
 
@@ -448,34 +427,12 @@ def scan_zstd_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "xxh_low32 long, checksum_ok long"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", "content_size", "byte_mass", "xxh_low32",
-                "checksum_ok"]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                payload = bytes(content)
-                m = decode_zstd_frame(payload)
-                if not m.get("has_checksum"):
-                    raise ValueError("zstd: checksum frame expected")
-                rows.append({
-                    "fname": path.rsplit("/", 1)[-1],
-                    "content_size": m["content_size"],
-                    "byte_mass": m["byte_mass"],
-                    "xxh_low32": m["xxh_low32"],
-                    "checksum_ok": m["checksum_ok"],
-                })
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame({k: [] for k in cols})
-            )
+    def checked(payload: bytes) -> dict:
+        m = decode_zstd_frame(payload)
+        if not m.get("has_checksum"):
+            raise ValueError("zstd: checksum frame expected")
+        return m
 
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.zst")
-        .load(_scratch(sf_dir, "real_zstd_ck"))
-    )
-    return bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    return decode_files(
+        spark, _scratch(sf_dir, "real_zstd_ck"), "*.zst", checked, schema
     )

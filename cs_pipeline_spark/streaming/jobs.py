@@ -60,10 +60,6 @@ def tumbling_job(events: DataFrame) -> DataFrame:
     return W.tumbling_counts(W.with_watermark(events))
 
 
-def sliding_job(events: DataFrame) -> DataFrame:
-    return W.sliding_counts(W.with_watermark(events))
-
-
 def session_job(events: DataFrame) -> DataFrame:
     return W.session_stats(W.with_watermark(events))
 

@@ -146,13 +146,3 @@ def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFr
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
     return _read_parquet(spark, path)
-
-
-def load_all(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {t: load(spark, t, sf_dir) for t in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every table as a temp view for spark.sql use."""
-    for t in TABLE_NAMES:
-        load(spark, t, sf_dir).createOrReplaceTempView(t)
