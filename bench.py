@@ -5,7 +5,9 @@ Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 line is a summary-only JSON object ``{"metric", "value": total_sec,
 "unit": "sec", "sf", "n_queries", "detail"}`` sized to survive the
 driver's ~2000-char tail capture; the per-query cold/warm/spread dicts
-are written to ``BENCH_DETAIL.json`` next to this file.
+are written to ``BENCH_DETAIL.json`` next to this file, and every run
+appends one ``{git_sha, dirty, cpus, sf, queries, warm, spread}`` line
+to the committed, append-only ``BENCH_HISTORY.jsonl`` beside it.
 
 Each query is built from the central registry and executed to
 completion with a count-style action (``df.write.format("noop")``
@@ -29,7 +31,11 @@ import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+# One line per run, appended and committed: the round-over-round
+# per-query comparison reads it instead of the overwritten detail file.
+HISTORY = os.path.join(HERE, "BENCH_HISTORY.jsonl")
 
 # Headline set: one per pipeline family (relational agg, join-heavy,
 # calendar resample, enrichment join, window, reshape, text dedup,
@@ -330,6 +336,44 @@ def _timed_cold(spark, registry, specs, names, sf_dir):
     return cold, warm, spreads, rows
 
 
+def code_state(root: str) -> dict:
+    """HEAD's SHA and whether tracked files other than this script's own
+    outputs differ from it; both None outside a git checkout."""
+    import subprocess
+
+    def git(*args: str) -> str:
+        return subprocess.run(
+            ["git", "-C", root, *args],
+            capture_output=True, text=True, timeout=30, check=True,
+        ).stdout.strip()
+
+    try:
+        sha = git("rev-parse", "HEAD")
+        status = git(
+            "status", "--porcelain", "--untracked-files=no", "--", ".",
+            ":!BENCH_DETAIL.json", ":!BENCH_HISTORY.jsonl",
+        )
+    except (OSError, subprocess.SubprocessError):
+        return {"git_sha": None, "dirty": None}
+    return {"git_sha": sha, "dirty": bool(status)}
+
+
+def history_record(code: dict, cpus, sf, queries, warm, spread) -> dict:
+    return {
+        **code,
+        "cpus": cpus,
+        "sf": sf,
+        "queries": queries,
+        "warm": warm,
+        "spread": spread,
+    }
+
+
+def append_history(path: str, record: dict) -> None:
+    with open(path, "a") as f:
+        f.write(json.dumps(record, sort_keys=True) + "\n")
+
+
 def _subset_main(subset_path: str, out_path: str) -> None:
     """Internal (cross-session re-time): fresh JVM, warm up + cold-time
     ONLY the named ops, write {"cold": {...}} to out_path."""
@@ -350,6 +394,8 @@ def _subset_main(subset_path: str, out_path: str) -> None:
 
 
 def main() -> None:
+    # the code this run times, taken before it writes anything
+    code = code_state(HERE)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
@@ -422,20 +468,15 @@ def main() -> None:
         "xsession_ops": xs_names,
         "sf": sf,
     }
-    here = os.path.dirname(os.path.abspath(__file__))
-    detail_path = os.path.join(here, "BENCH_DETAIL.json")
+    detail_path = os.path.join(HERE, "BENCH_DETAIL.json")
     with open(detail_path, "w") as f:
         json.dump(detail, f, indent=1)
-    # Round-stamped copy (VERDICT r10 ask #7): each driver bench run
-    # overwrites BENCH_DETAIL.json, which left the round-over-round
-    # per-query comparison to git archaeology. When $SPARK_GRAFT_ROUND
-    # is set, keep an immutable per-round detail file beside it.
-    rnd = os.environ.get("SPARK_GRAFT_ROUND")
-    if rnd:
-        with open(
-            os.path.join(here, f"BENCH_DETAIL_r{rnd}.json"), "w"
-        ) as f:
-            json.dump(detail, f, indent=1)
+    append_history(
+        HISTORY,
+        history_record(
+            code, spark.sparkContext.defaultParallelism, sf, cold, warm, spreads
+        ),
+    )
     # LAST stdout line: summary-only JSON, short enough for any tail
     # capture to hold whole.
     print(

@@ -512,14 +512,20 @@ def dedup_substring_repeats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (never under-removes) and each costs ≤ 2k+ spurious tokens cut,
     that is ~10⁻⁷ of the corpus — acceptable for a removal pass; if
     deletion precision ever matters, salt-and-pair two independent
-    64-bit hashes (collision odds then n²/2¹²⁹). The count pass is map-side
-    combined; the join back rides the same digest partitioning
-    (dedup_span_corpus shape) with the duplicated-anchor filter
-    applied to the aggregated side BEFORE the join. The gap-merge
-    window partitions BY DOC (bounded by doc length), never
-    globally. At 100 TB this is exactly the deduplicate-text-datasets
-    two-pass shape with Spark shuffles replacing the suffix-array
-    sort.
+    64-bit hashes (collision odds then n²/2¹²⁹). Each anchor's min and
+    count are one window over ``d``: a single
+    ``hashpartitioning(d)`` shuffle of every occurrence row with no
+    partial aggregation, so all occurrences of one anchor meet in one
+    reduce task, whose window buffer holds the whole group (4,096 rows
+    in memory, then Spark's spillable sorter). Hot-anchor bound: the
+    largest anchor multiplicity at sf0.1 is 4 (235,704 windows over
+    224,694 distinct anchors); an occurrence row is 24 bytes (null
+    bitset + two int64s), so a boilerplate anchor that repeats 10⁸
+    times puts 10⁸ × 24 B = 2.4 GB through one task — a straggler
+    that spills, never an OOM. The gap-merge window partitions BY DOC
+    (bounded by doc length), never globally. At 100 TB this is
+    exactly the deduplicate-text-datasets two-pass shape with Spark
+    shuffles replacing the suffix-array sort.
     """
     docs = load(spark, "documents", sf_dir)
     toked = docs.select("doc_id", _tokens(F.expr(_NORM)).alias("t"))

@@ -19,6 +19,14 @@ one you would set on a 1000-executor cluster too:
   package's parent directory is merged into
   ``spark.executorEnv.PYTHONPATH`` so workers import the daemon and the
   operators' pickled functions from any driver working directory.
+- Driver JVM class-data-sharing archive (``jvmarchive``) — a local
+  driver starts from a memory-mapped AppCDS archive of the classes an
+  earlier session loaded, instead of parsing and verifying them again
+  from Spark's jars. It lives in
+  ``${XDG_CACHE_HOME:-~/.cache}/cs_pipeline_spark/jvm/<key>.jsa``, keyed
+  by the ``java`` binary and Spark's jar listing, and the first session
+  without it writes it at exit (10-18 s, once). Delete that directory
+  to reset it.
 """
 
 from __future__ import annotations
@@ -26,6 +34,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from cs_pipeline_spark import jvmarchive
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
@@ -88,6 +98,8 @@ def get_spark(
         # serving many query shapes.
         .config("spark.sql.codegen.cache.maxEntries", "5000")
     )
-    for k, v in worker_conf(extra_conf).items():
-        b = b.config(k, v)
-    return b.getOrCreate()
+    conf = worker_conf(extra_conf)
+    with jvmarchive.launch(conf) as jvm_conf:
+        for k, v in {**conf, **jvm_conf}.items():
+            b = b.config(k, v)
+        return b.getOrCreate()
