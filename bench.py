@@ -273,17 +273,13 @@ def _warmup(spark, specs, names, sf_dir) -> None:
     mode r9 recorded (dedup_lsh_incremental 5.6 → 18.3 s on unchanged
     code) is structurally impossible."""
     from cs_pipeline_spark.sources.scans import (
-        _SCRATCH,
-        _sf_fingerprint,
         ensure_fixtures,
+        generation_root,
     )
 
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
     ensure_fixtures(spark, sf_dir)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    marker = os.path.join(
-        _SCRATCH, f"{tag}-{_sf_fingerprint(sf_dir)}", "_fixtures_done"
-    )
+    marker = os.path.join(generation_root(sf_dir), "_fixtures_done")
     if not os.path.exists(marker):
         raise RuntimeError(
             "fixture sweep incomplete before timing — cold mode unpinned"

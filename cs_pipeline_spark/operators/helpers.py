@@ -43,8 +43,12 @@ explicit cast). Spark's Column path promotes exactly.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from cs_pipeline_spark.registry import concurrently
 
 Q1 = 1000000.0  # quantum⁻¹ for first moments (6 dp)
 Q2 = 1000000000000.0  # Q1² for second moments
@@ -467,17 +471,18 @@ def with_prefix_agg(
     )
 
 def literal_df(spark, rows, schema):
-    """BOUNDED driver-known rows as a JVM-literal plan (one literal
-    projection of ``spark.range(1)`` per row, unioned — constant-folds
-    to a LocalRelation at plan time). Use this instead of
+    """BOUNDED driver-known rows as a JVM-literal plan. Atomic-typed
+    rows become a SQL VALUES LocalRelation, which ``collect()`` answers
+    with no Spark job; rows with a non-atomic column (array, map,
+    struct, timestamp…) fall back to per-column CASE chains over a
+    1-partition Range, one no-op task per action. Use this instead of
     ``spark.createDataFrame`` whenever the rows end up INSIDE a
     returned query plan: a createDataFrame-backed table is a
     Python-RDD scan that re-executes on every downstream action
     (0.15–0.24 s per action for a 1-row table on 4 cores, 0.2–0.7 s
     before the ``pyworker`` daemon — the r10 ml_adaboost_stumps
-    finding); a literal projection costs nothing
-    after planning. Rows must be few (≤ dozens): each row adds a
-    plan node. ``schema`` is a StructType or a DDL string."""
+    finding). Rows must be few (≤ dozens): every row is spelled out in
+    the plan. ``schema`` is a StructType or a DDL string."""
     if isinstance(schema, str):
         import pyspark.sql.types as _T
 
@@ -520,6 +525,24 @@ def literal_df(spark, rows, schema):
     # chains: ONE task per action (a union of one-row projections
     # costs a task per row)
     return spark.range(0, len(rows), 1, 1).select(*cols)
+
+
+def metric_rows(spark, sf_dir, blocks):
+    """Labelled report rows ``[(label, metric, value), ...]`` from
+    ``blocks`` of ``(builder, [(label, metric, Column), ...])``: each
+    block is one 1-row ``builder(spark, sf_dir).agg(...)`` job with
+    every Column cast to long. The blocks run through ``concurrently``,
+    so plan building and jobs overlap and carry the caller's job group.
+    Rows come back in block order, ready for ``literal_df``."""
+
+    def block(builder, metrics):
+        cols = [c.cast("long").alias(f"m{i}")
+                for i, (*_, c) in enumerate(metrics)]
+        row = builder(spark, sf_dir).agg(*cols).collect()[0]
+        return [(lab, met, row[i]) for i, (lab, met, _) in enumerate(metrics)]
+
+    done = concurrently(spark, [partial(block, b, m) for b, m in blocks])
+    return [r for rows in done for r in rows]
 
 
 def _values_rows(rows, schema):

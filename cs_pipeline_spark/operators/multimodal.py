@@ -49,6 +49,7 @@ from pyspark.sql.types import (
 from cs_pipeline_spark.operators.helpers import (
     dround,
     literal_df,
+    metric_rows,
     with_prefix_agg,
 )
 from cs_pipeline_spark.registry import register
@@ -1126,10 +1127,8 @@ def mm_curate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from cs_pipeline_spark.sources.webp import mm_decode_webp_meta
 
-    # sub-builder CALLS run inside the pool workers below (their
-    # registered wrappers push their own pin-stack keys per thread —
-    # the r10 thread-local-pin convention), so plan construction of
-    # the 14 decoders overlaps too, not just their jobs.
+    # sub-builder CALLS run inside metric_rows' workers, so plan
+    # construction of the 14 decoders overlaps too, not just their jobs.
     wav, energy, jdc, dh = (
         mm_decode_wav, mm_audio_energy, mm_decode_jpeg_dc, mm_image_dhash
     )
@@ -1155,19 +1154,6 @@ def mm_curate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bench evicts the memoized plan before each timed run), nothing
     # persists across invocations. The cast(value as long) matches the
     # previous stack() unpivot bit-for-bit; same 26 rows/labels/values.
-    def block(builder, metrics) -> list:
-        agg = builder(spark, sf_dir).agg(
-            *[
-                c.cast("long").alias(f"m{i}")
-                for i, (_, _, c) in enumerate(metrics)
-            ]
-        )
-        row = agg.collect()[0]
-        return [
-            (mod, met, row[f"m{i}"])
-            for i, (mod, met, _) in enumerate(metrics)
-        ]
-
     blocks = [
         (wav, [
             ("audio", "n_clips", F.count(F.lit(1))),
@@ -1235,11 +1221,7 @@ def mm_curate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
              F.countDistinct("artist")),
         ]),
     ]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=10) as ex:
-        futs = [ex.submit(block, builder, m) for builder, m in blocks]
-        rows = [r for f in futs for r in f.result()]
+    rows = metric_rows(spark, sf_dir, blocks)
     return literal_df(
         spark, rows, "modality string, metric string, value long"
     )

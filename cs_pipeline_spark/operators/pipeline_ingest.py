@@ -21,6 +21,8 @@ flagship adds only 1-row aggregates and a union. This is the funnel a
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -112,46 +114,32 @@ def ingest_incremental_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     docstring.
 
     Scale: three incremental-maintenance stages (each documented in
-    its own op); the flagship adds 1-row aggregates and an 8-row
-    union.
+    its own op); the flagship adds five 1-row aggregates and an 8-row
+    literal report.
     """
     from cs_pipeline_spark.operators.dedup import dedup_lsh_incremental
+    from cs_pipeline_spark.operators.helpers import literal_df, metric_rows
     from cs_pipeline_spark.operators.similarity import (
         sim_ivf_incremental,
         sim_ivf_retrain,
     )
-    from cs_pipeline_spark.registry import pin
+    from cs_pipeline_spark.registry import concurrently, pin
     from cs_pipeline_spark.tables import load
 
     emb = load(spark, "embeddings", sf_dir)
-    # pin each stage output: the funnel derives several aggregates
-    # from each (pairs feeds 4 branches) — without the pin every
-    # branch re-executes the full LSH/IVF pipeline.
-    # The three index builds are INDEPENDENT (different persisted
-    # artifacts, no shared state beyond the memoized scan), so their
-    # build-time work and cache materialization overlap from a small
-    # thread pool (guide §2.6: back-fill idle executors with the next
-    # independent job). Each registered sub-builder pushes its own
-    # pin-stack key in its worker thread, so internal pins still tie
-    # to the right LRU entries; the outer pins below tie to this
-    # flagship's entry exactly as before.
-    from concurrent.futures import ThreadPoolExecutor
+    # pin each stage output (pairs is read four times by two aggregates;
+    # unpinned, each read re-executes the LSH pipeline). The three index
+    # builds share no state beyond the memoized scan, so their builds and
+    # cache writes overlap (guide §2.6).
+    def stage(builder) -> DataFrame:
+        df = pin(builder(spark, sf_dir))
+        df.count()  # fill the cache before the aggregates share it
+        return df
 
-    with ThreadPoolExecutor(max_workers=3) as ex:
-        futs = [
-            ex.submit(fn, spark, sf_dir)
-            for fn in (
-                dedup_lsh_incremental,
-                sim_ivf_incremental,
-                sim_ivf_retrain,
-            )
-        ]
-        # pin on THIS thread (the pin stack is thread-local — in a
-        # worker it would be empty and pin() degrades to a no-op),
-        # then materialize the three caches concurrently
-        pairs, search, retrain = (pin(f.result()) for f in futs)
-        for _ in ex.map(lambda d: d.count(), (pairs, search, retrain)):
-            pass
+    stages = (dedup_lsh_incremental, sim_ivf_incremental, sim_ivf_retrain)
+    pairs, search, retrain = concurrently(
+        spark, [partial(stage, b) for b in stages]
+    )
 
     is_b = lambda c: F.col(c) % _MOD == 0  # noqa: E731
     dup_vecs = (
@@ -165,42 +153,29 @@ def ingest_incremental_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    # r11 (the mm_curate_e2e shape, guide §2.6): the eight funnel
-    # aggregates run as concurrent jobs over the already-pinned stage
-    # outputs and the bounded 8-row report returns as a literal
-    # relation — admitted = batch − dup_vectors is exact driver
-    # integer arithmetic, identical to the crossJoin-subtract branch.
-    from cs_pipeline_spark.operators.helpers import literal_df
-
-    def lval(df, agg):
-        r = df.agg(agg.cast("long").alias("value")).collect()[0]
-        return r["value"]
-
-    with ThreadPoolExecutor(max_workers=7) as ex:
-        f_batch = ex.submit(
-            lambda: emb.filter(is_b("vec_id")).count()
-        )
-        f_pairs = ex.submit(pairs.count)
-        f_dup = ex.submit(dup_vecs.count)
-        f_search = ex.submit(search.count)
-        f_bn = ex.submit(
-            lambda: search.filter(is_b("neighbor_id")).count()
-        )
-        f_shift = ex.submit(lval, retrain, F.max("shift_scaled"))
-        f_moved = ex.submit(
-            lval, retrain, F.sum(F.abs(F.col("n_after") - F.col("n_before")))
-        )
-        batch_v, dup_v = f_batch.result(), f_dup.result()
-        rows = [
-            ("batch", "vectors", batch_v),
-            ("dedup", "dup_pairs", f_pairs.result()),
-            ("dedup", "dup_vectors", dup_v),
-            ("dedup", "admitted", batch_v - dup_v),
-            ("search", "results", f_search.result()),
-            ("search", "batch_neighbors", f_bn.result()),
-            ("retrain", "max_shift_scaled", f_shift.result()),
-            ("retrain", "moved_abs", f_moved.result()),
-        ]
+    # r11 (the mm_curate_e2e shape, guide §2.6): one concurrent
+    # aggregate per input over the already-pinned stage outputs, and
+    # the bounded 8-row report returns as a literal relation —
+    # admitted = batch − dup_vectors is exact driver integer
+    # arithmetic, identical to the crossJoin-subtract branch.
+    n = F.count(F.lit(1))
+    rows = metric_rows(spark, sf_dir, [
+        (lambda *_: emb.filter(is_b("vec_id")), [("batch", "vectors", n)]),
+        (lambda *_: pairs, [("dedup", "dup_pairs", n)]),
+        (lambda *_: dup_vecs, [("dedup", "dup_vectors", n)]),
+        (lambda *_: search, [
+            ("search", "results", n),
+            ("search", "batch_neighbors",
+             F.count(F.when(is_b("neighbor_id"), 1))),
+        ]),
+        (lambda *_: retrain, [
+            ("retrain", "max_shift_scaled", F.max("shift_scaled")),
+            ("retrain", "moved_abs",
+             F.sum(F.abs(F.col("n_after") - F.col("n_before")))),
+        ]),
+    ])
+    v = {met: x for _, met, x in rows}
+    rows.insert(3, ("dedup", "admitted", v["vectors"] - v["dup_vectors"]))
     return literal_df(
         spark, rows, "stage string, metric string, value long"
     )
@@ -371,7 +346,7 @@ def lake_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11: no pins — each input feeds exactly ONE aggregate job (the
     # stack rewrite already folded the per-metric branches), so the
     # cache write was pure cold overhead; sub-builder calls happen in
-    # the pool workers below so the 9 decode plans construct and run
+    # metric_rows' workers so the 9 decode plans construct and run
     # concurrently (guide §2.6).
     pq, av, dl = scan_parquet_footer, scan_avro_blocks, scan_delta_log
     ic, pp, oc = (
@@ -389,19 +364,6 @@ def lake_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # equal versions fall back to max metric, which is exactly what
     # MAX over the version-filtered rows returned). 25 output rows,
     # same labels, same values.
-    def block(builder, metrics) -> list:
-        agg = builder(spark, sf_dir).agg(
-            *[
-                c.cast("long").alias(f"m{i}")
-                for i, (_, _, c) in enumerate(metrics)
-            ]
-        )
-        row = agg.collect()[0]
-        return [
-            (lay, met, row[f"m{i}"])
-            for i, (lay, met, _) in enumerate(metrics)
-        ]
-
     def at_head(version_col: str, metric_col: str) -> F.Column:
         return F.max(F.struct(F.col(version_col), F.col(metric_col)))[
             metric_col
@@ -470,16 +432,10 @@ def lake_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("iceberg", "mor_live_rows", F.sum("live_rows")),
         ]),
     ]
-    from concurrent.futures import ThreadPoolExecutor
+    from cs_pipeline_spark.operators.helpers import literal_df, metric_rows
 
-    from cs_pipeline_spark.operators.helpers import literal_df
-
-    with ThreadPoolExecutor(max_workers=9) as ex:
-        futs = [ex.submit(block, builder, m) for builder, m in blocks]
-        rows = [r for f in futs for r in f.result()]
-    return literal_df(
-        spark, rows, "layer string, metric string, value long"
-    )
+    rows = metric_rows(spark, sf_dir, blocks)
+    return literal_df(spark, rows, "layer string, metric string, value long")
 
 
 # ---------- flagship #11: wire/interchange format triage ----------
@@ -632,7 +588,7 @@ def wire_formats_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r11 (the mm_curate_e2e / lake_audit_e2e shape, guide §2.6): no
     # pins (each input feeds exactly ONE aggregate job), sub-builders
-    # called inside the pool workers, ten concurrent aggregate jobs,
+    # called inside metric_rows' workers, ten concurrent aggregate jobs,
     # bounded 28-row literal report. Same rows, labels, values.
     ar, ast, mp, zl, xz = (
         scan_arrow_ipc, scan_arrow_stream, scan_msgpack_records,
@@ -642,19 +598,6 @@ def wire_formats_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         scan_sqlite_db, scan_gzip_headers, scan_cbor_records,
         scan_torrent_manifest, scan_zip_central_dir,
     )
-
-    def block(builder, metrics) -> list:
-        agg = builder(spark, sf_dir).agg(
-            *[
-                c.cast("long").alias(f"m{i}")
-                for i, (_, _, c) in enumerate(metrics)
-            ]
-        )
-        row = agg.collect()[0]
-        return [
-            (fmt, met, row[f"m{i}"])
-            for i, (fmt, met, _) in enumerate(metrics)
-        ]
 
     blocks = [
         (ar, [
@@ -709,13 +652,7 @@ def wire_formats_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("zip", "crc_verified", F.sum("crc_ok")),
         ]),
     ]
-    from concurrent.futures import ThreadPoolExecutor
+    from cs_pipeline_spark.operators.helpers import literal_df, metric_rows
 
-    from cs_pipeline_spark.operators.helpers import literal_df
-
-    with ThreadPoolExecutor(max_workers=10) as ex:
-        futs = [ex.submit(block, builder, m) for builder, m in blocks]
-        rows = [r for f in futs for r in f.result()]
-    return literal_df(
-        spark, rows, "format string, metric string, value long"
-    )
+    rows = metric_rows(spark, sf_dir, blocks)
+    return literal_df(spark, rows, "format string, metric string, value long")

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import threading
 from collections import OrderedDict
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -69,6 +69,49 @@ def pin(df: DataFrame, level=None) -> DataFrame:
     with _PLAN_LOCK:
         _PINNED.setdefault(stack[-1], []).append(out)
     return out
+
+
+# Width of the driver-side pool behind concurrently(): it bounds how
+# many independent jobs one builder submits at once, not executor
+# parallelism (the scheduler shares the cores among whatever runs).
+_POOL_MAX = 10
+
+
+def concurrently(spark: SparkSession, thunks: Sequence[Callable]) -> list:
+    """Run independent zero-argument ``thunks`` on a driver thread pool
+    ``min(len(thunks), _POOL_MAX)`` wide; return their results in input
+    order, re-raising the first exception in input order.
+
+    Each thunk is wrapped on the calling thread in pyspark's
+    ``inheritable_thread_target(spark)``, so its worker runs on its own
+    clone of the caller's local properties: its jobs carry the caller's
+    job group and description, and nothing a worker sets leaks back.
+    Each worker's pin stack starts with the caller's key, so a ``pin()``
+    in a thunk ties to the calling builder's LRU entry; a registered
+    sub-builder called in a thunk pushes its own key as usual. This is
+    the one place the package starts threads."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    top = (getattr(_PIN_STACK, "s", None) or [])[-1:]
+
+    def seeded(thunk: Callable) -> Callable:
+        def run():
+            saved = getattr(_PIN_STACK, "s", None)
+            _PIN_STACK.s = list(top)
+            try:
+                return thunk()
+            finally:
+                _PIN_STACK.s = saved
+
+        return inheritable_thread_target(spark)(run)
+
+    if not thunks:
+        return []
+    with ThreadPoolExecutor(min(len(thunks), _POOL_MAX)) as ex:
+        futs = [ex.submit(seeded(t)) for t in thunks]
+        return [f.result() for f in futs]
 
 
 def _lru_get(key: tuple) -> DataFrame | None:

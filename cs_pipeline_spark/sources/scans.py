@@ -69,9 +69,16 @@ def _sf_fingerprint(sf_dir: str) -> str:
     return h.hexdigest()
 
 
-def _scratch(sf_dir: str, name: str) -> str:
+def generation_root(sf_dir: str) -> str:
+    """The scratch generation of ``sf_dir``'s current parquet files,
+    ``<_SCRATCH>/<sf dir name>-<fingerprint>``: every fixture derived
+    from them lives under it, with the ``_fixtures_done`` marker."""
     tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(_SCRATCH, f"{tag}-{_sf_fingerprint(sf_dir)}", name)
+    return os.path.join(_SCRATCH, f"{tag}-{_sf_fingerprint(sf_dir)}")
+
+
+def _scratch(sf_dir: str, name: str) -> str:
+    path = os.path.join(generation_root(sf_dir), name)
     os.makedirs(os.path.dirname(path), exist_ok=True)
     return path
 
@@ -147,6 +154,8 @@ def decode_files(
 _FIXTURES: list = []
 _ENSURED: set[str] = set()
 _ENSURE_LOCK = __import__("threading").Lock()
+# per generation: the absolute sf dirs it was derived from, one a line
+_SOURCES = "_sources"
 
 
 def _fixture(fn):
@@ -163,8 +172,7 @@ def ensure_fixtures(spark: SparkSession, sf_dir: str) -> None:
     from cs_pipeline_spark.registry import _load_all_modules
 
     _load_all_modules()
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(_SCRATCH, f"{tag}-{_sf_fingerprint(sf_dir)}")
+    root = generation_root(sf_dir)
     if root in _ENSURED:
         return
     marker = os.path.join(root, "_fixtures_done")
@@ -175,6 +183,8 @@ def ensure_fixtures(spark: SparkSession, sf_dir: str) -> None:
     with _ENSURE_LOCK:
         if root in _ENSURED:
             return
+        _record_source(root, sf_dir)
+        _prune_orphans(root)
         done: set[str] = set()
         if os.path.exists(marker):
             with open(marker) as f:
@@ -210,6 +220,38 @@ def ensure_fixtures(spark: SparkSession, sf_dir: str) -> None:
                 with open(marker, "w") as f:
                     f.write("\n".join(sorted(set(names) | done)))
         _ENSURED.add(root)
+
+
+def _record_source(root: str, sf_dir: str) -> None:
+    os.makedirs(root, exist_ok=True)
+    path, src = os.path.join(root, _SOURCES), os.path.abspath(sf_dir)
+    try:
+        with open(path) as f:
+            known = f.read().splitlines()
+    except FileNotFoundError:
+        known = []
+    if src not in known:
+        with open(path, "a") as f:
+            f.write(src + "\n")
+
+
+def _prune_orphans(keep: str) -> None:
+    """Delete the generations beside ``keep`` whose recorded sf dirs
+    are all gone (a removed pytest tmp dir): nothing can read them
+    again. A generation without a record is left alone."""
+    import shutil
+
+    parent = os.path.dirname(keep)
+    for name in os.listdir(parent):
+        gen = os.path.join(parent, name)
+        try:
+            with open(os.path.join(gen, _SOURCES)) as f:
+                srcs = f.read().splitlines()
+        except OSError:
+            continue
+        if gen != keep and srcs and not any(map(os.path.isdir, srcs)):
+            shutil.rmtree(gen, ignore_errors=True)
+            _ENSURED.discard(gen)
 
 
 # ---------- tolerant CSV scan ----------

@@ -41,3 +41,31 @@ def test_failing_fixtures_warn_once_and_leave_no_marker(spark, tmp_path, monkeyp
     root = os.path.dirname(scans._scratch(str(sf), "x"))
     assert os.path.isdir(root)
     assert not os.path.exists(os.path.join(root, "_fixtures_done"))
+
+
+def test_generations_of_deleted_sf_dirs_are_pruned(spark, tmp_path, monkeypatch):
+    registry._load_all_modules()
+
+    def _fx_ok(spark, sf_dir):
+        scans._scratch(sf_dir, "ok")
+
+    monkeypatch.setattr(scans, "_FIXTURES", [_fx_ok])
+    monkeypatch.setattr(scans, "_ENSURED", set())
+    monkeypatch.setattr(scans, "_SCRATCH", str(tmp_path / "scratch"))
+    kept, gone = tmp_path / "sf_kept", tmp_path / "sf_gone"
+    for sf in (kept, gone):
+        sf.mkdir()
+        scans.ensure_fixtures(spark, str(sf))
+    kept_root, gone_root = (
+        scans.generation_root(str(sf)) for sf in (kept, gone)
+    )
+    unrecorded = os.path.join(scans._SCRATCH, "old-000000000000")
+    os.makedirs(unrecorded)
+    assert os.path.isdir(gone_root) and os.path.isdir(kept_root)
+
+    gone.rmdir()
+    scans._ENSURED.clear()  # a new process
+    scans.ensure_fixtures(spark, str(kept))
+    assert not os.path.exists(gone_root)
+    assert os.path.exists(os.path.join(kept_root, "_fixtures_done"))
+    assert os.path.isdir(unrecorded)  # no record: left alone
