@@ -32,7 +32,7 @@ from pyspark.sql.window import Window
 
 from cs_pipeline_spark.operators.helpers import dround
 from cs_pipeline_spark.registry import register
-from cs_pipeline_spark.tables import load
+from cs_pipeline_spark.tables import load, row_count
 
 _ITERS = 3
 # two out-links per doc: affine maps mod N; non-coprime multipliers (4, 10) make the
@@ -57,10 +57,9 @@ def _edges(docs: DataFrame, n_docs: int) -> DataFrame:
 
 
 def _n_docs(spark: SparkSession, sf_dir: str) -> int:
-    # document count used as a literal in the edge synthesis. Not a
-    # footer read: on the V1 parquet source count() runs two jobs (a
-    # scan with partial counts, then the final aggregate)
-    return load(spark, "documents", sf_dir).count()
+    # document count used as a literal in the edge synthesis, read from
+    # the parquet footer (no Spark job)
+    return row_count(spark, "documents", sf_dir)
 
 
 def _pagerank_oracle() -> str:
@@ -513,37 +512,46 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     depth, contamination blast radius, link-distance features).
 
     Level-synchronous BFS as iterated relational algebra: each level
-    joins the current distance table to the edge list and MIN-merges
-    discovered distances — monotone (distances only decrease), so
+    left-joins the current distance table to the edge list, emits every
+    node at its own distance plus every out-neighbour one hop further,
+    and MIN-merges per node — monotone (distances only decrease), so
     _BFS_HOPS fixed iterations compute exact distances for every node
     within that radius, deterministically on any partitioning
-    (MIN is order-free; no tie-breaking needed).
+    (MIN is order-free and idempotent, so a node repeated once per
+    out-edge merges to the same distance; no tie-breaking needed).
+    Each level reads its predecessor ONCE, so the plan grows linearly
+    in the hop count and the whole loop stays one lazy plan: no job
+    runs at build time.
 
-    Scale: per level, one hash join frontier×edges (co-partitioned on
-    the join key after the first iteration — Spark reuses the
-    exchange) plus one map-side-combined MIN groupBy. State is
-    (node, dist) pairs — never materializes paths. Bounded-hop BFS is
-    the 100 TB-safe form; unbounded diameters want the doubling
-    (pointer-jumping) trick ``dedup_clusters`` uses for components.
+    Scale: per level, one hash join frontier×edges (the edge list's
+    exchange is reused across levels) plus one map-side-combined MIN
+    groupBy. State is (node, dist) pairs — never materializes paths.
+    Bounded-hop BFS is the 100 TB-safe form; unbounded diameters want
+    the doubling (pointer-jumping) trick ``dedup_clusters`` uses for
+    components.
     """
     docs = load(spark, "documents", sf_dir)
-    edges = _edges(docs, _n_docs(spark, sf_dir))
+    out = _edges(docs, _n_docs(spark, sf_dir)).withColumnRenamed("src", "node")
     d = docs.filter(F.col("doc_id") < _BFS_SEEDS).select(
         F.col("doc_id").alias("node"), F.lit(0).cast("long").alias("dist")
     )
     for _ in range(_BFS_HOPS):
-        grown = edges.join(
-            d.withColumnRenamed("node", "src"), "src"
-        ).select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
         d = (
-            d.unionByName(grown)
+            d.join(out, "node", "left")
+            .select(
+                F.inline(
+                    F.array(
+                        F.struct("node", "dist"),
+                        F.struct(
+                            F.col("dst").alias("node"),
+                            (F.col("dist") + 1).alias("dist"),
+                        ),
+                    )
+                )
+            )
+            .filter(F.col("node").isNotNull())
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            # each level references its predecessor twice (union +
-            # frontier join): without a per-round cut the lineage
-            # doubles per hop (2^hops leaf duplication — the
-            # graph_k_core trap documented in CLAUDE.md)
-            .localCheckpoint(eager=True)
         )
     return d
 
@@ -1045,7 +1053,7 @@ def _lpa_oracle() -> str:
     doc=f"label-propagation community detection ({_LPA_ITERS} "
     "synchronous rounds): each node adopts its neighbors' plurality "
     "label with the smallest-label tie-break — fully deterministic "
-    "LPA (no rand ordering), per-round materialization; output is "
+    "LPA (no rand ordering), one lazy plan over all rounds; output is "
     "the community-size census the modularity score reads from",
 )
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1058,48 +1066,62 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     round count (synchronous LPA can oscillate on bipartite-ish
     structures) makes the output a pure function of the graph.
 
-    Round t+1 references round t TWICE (vote join + carry-forward for
-    voteless nodes) — the doubling trap CLAUDE.md documents for
-    graph_k_core — so every round is `.localCheckpoint(eager=True)`
-    on Spark and AS MATERIALIZED in the oracle.
+    Each round reads round t ONCE: ``labels LEFT JOIN und ON node =
+    dst`` emits a self row (node, label, v=0) and, per in-edge, a vote
+    row (src, label, v=1); summing v per (node, label) gives the vote
+    counts, and the row_number pick over (c DESC, label) takes the
+    plurality label. A node with no votes keeps its own label because
+    its self row (c = 0) is its only candidate; a voted node's own
+    label keeps its count, since self rows add 0. So the round needs
+    no carry-forward join and no per-round cut, and the whole loop is
+    one lazy plan: no job runs at build time. The oracle keeps its
+    vote + carry-forward form, AS MATERIALIZED per round; the two agree
+    because every edge end is a node (doc ids are 0..N−1 and the edge
+    maps land in [0, N)), so no vote row names a node outside the set.
 
-    Scale: per round, one groupBy((node, label)) shuffle of edge-end
-    votes (map-side combined), one window over votes per node, one
-    key join back — the Pregel-as-SQL shape; state per node is one
-    integer label, checkpointing keeps lineage flat.
+    Scale: per round, one join of the labels to the undirected edge
+    list, one groupBy((node, label)) shuffle of self and vote rows
+    (map-side combined) and one window over candidates per node — the
+    Pregel-as-SQL shape; state per node is one integer label, and the
+    plan grows linearly in the round count.
     """
     docs = load(spark, "documents", sf_dir)
     n = _n_docs(spark, sf_dir)
     e = _edges(docs, n).filter(F.col("src") != F.col("dst"))
-    und = e.union(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
+    und = (
+        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .distinct()
+        .withColumnRenamed("dst", "node")
+    )
     labels = docs.select(
         F.col("doc_id").alias("node"), F.col("doc_id").alias("label")
-    ).localCheckpoint(eager=True)
-    from pyspark.sql import Window
-
+    )
+    w = Window.partitionBy("vnode").orderBy(F.col("c").desc(), F.col("label"))
     for _ in range(_LPA_ITERS):
-        votes = (
-            und.join(labels, und.dst == labels.node)
-            .groupBy(F.col("src").alias("vnode"), "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        w = Window.partitionBy("vnode").orderBy(
-            F.col("c").desc(), F.col("label")
-        )
-        best = (
-            votes.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vnode", F.col("label").alias("new_label"))
-        )
         labels = (
-            labels.join(best, labels.node == best.vnode, "left")
+            labels.join(und, "node", "left")
             .select(
-                "node",
-                F.coalesce("new_label", "label").alias("label"),
+                F.inline(
+                    F.array(
+                        F.struct(
+                            F.col("node").alias("vnode"),
+                            "label",
+                            F.lit(0).alias("v"),
+                        ),
+                        F.struct(
+                            F.col("src").alias("vnode"),
+                            "label",
+                            F.lit(1).alias("v"),
+                        ),
+                    )
+                )
             )
-            .localCheckpoint(eager=True)
+            .filter(F.col("vnode").isNotNull())
+            .groupBy("vnode", "label")
+            .agg(F.sum("v").alias("c"))
+            .withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select(F.col("vnode").alias("node"), "label")
         )
     return labels.groupBy(F.col("label").alias("community")).agg(
         F.count(F.lit(1)).cast("long").alias("size")

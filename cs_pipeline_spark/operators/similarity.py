@@ -47,7 +47,7 @@ from pyspark.sql.window import Window
 from cs_pipeline_spark.operators.dedup import _sql_qdot, qdot
 from cs_pipeline_spark.operators.helpers import sql_davg, with_rank_targets, one_part, literal_df
 from cs_pipeline_spark.registry import pin, register
-from cs_pipeline_spark.tables import load
+from cs_pipeline_spark.tables import load, row_count
 
 TOP_K = 10
 N_QUERIES = 8  # query set = vec_id < 8
@@ -5035,9 +5035,9 @@ def corpus_facility_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale-adaptive, not a core-count constant): ~64 Ki rows ≈ 32 MB
     # of sv per task keeps Python-worker fan-out proportional to data
     # — 1 task here, thousands at 100 TB. eqs preserves emb's
-    # cardinality, and count() on the bare scan is answered from
-    # parquet footer metadata (no data pass).
-    n_vecs = emb.count()
+    # cardinality, and its row count is read from the parquet footer
+    # (no Spark job).
+    n_vecs = row_count(spark, "embeddings", sf_dir)
     smat = pin(
         eqs.select("vec_id", "eq", "qa")
         .coalesce(max(1, -(-n_vecs // 65536)))

@@ -188,13 +188,15 @@ def ensure_fixtures(spark: SparkSession, sf_dir: str) -> None:
         done: set[str] = set()
         if os.path.exists(marker):
             with open(marker) as f:
-                done = set(f.read().split())
+                done = {ln.split()[0] for ln in f.read().splitlines() if ln.strip()}
         # the marker records WHICH fixtures the completed sweep covered;
         # a marker written by an older/partial registration never
         # short-circuits a fuller one
         if not set(names) <= done:
             failed: list[str] = []
+            skipped: list[str] = []
             for fn in _FIXTURES:
+                name = f"{fn.__module__}.{fn.__qualname__}"
                 try:
                     fn(spark, sf_dir)
                 except Exception as e:  # noqa: BLE001 - reported below
@@ -202,11 +204,11 @@ def ensure_fixtures(spark: SparkSession, sf_dir: str) -> None:
                     # cannot build every fixture; the sweep goes on, and
                     # an op that reads a missing fixture still fails at
                     # its own scan
+                    if _missing_table(e, sf_dir):
+                        skipped.append(name)
+                        continue
                     first = (str(e).splitlines() or [""])[0][:200]
-                    failed.append(
-                        f"{fn.__module__}.{fn.__qualname__}: "
-                        f"{type(e).__name__}: {first}"
-                    )
+                    failed.append(f"{name}: {type(e).__name__}: {first}")
             if failed:
                 # no marker: the next session retries the failed fixtures
                 warnings.warn(
@@ -217,9 +219,32 @@ def ensure_fixtures(spark: SparkSession, sf_dir: str) -> None:
                     stacklevel=2,
                 )
             else:
+                # a fixture whose source table is absent is marked
+                # skipped: the table cannot appear without changing the
+                # fingerprint, so this generation never needs it
+                lines = sorted((set(names) | done) - set(skipped))
+                lines += sorted(f"{n} skipped" for n in skipped)
                 with open(marker, "w") as f:
-                    f.write("\n".join(sorted(set(names) | done)))
+                    f.write("\n".join(lines))
         _ENSURED.add(root)
+
+
+def _missing_table(e: Exception, sf_dir: str) -> bool:
+    """True when ``e`` is Spark's ``PATH_NOT_FOUND`` for a parquet
+    table directly in ``sf_dir`` that does not exist. Such a table is
+    covered by ``_sf_fingerprint``: adding it starts a new generation."""
+    from urllib.parse import urlparse
+
+    from pyspark.errors import AnalysisException
+
+    if not isinstance(e, AnalysisException) or e.getCondition() != "PATH_NOT_FOUND":
+        return False
+    path = urlparse((e.getMessageParameters() or {}).get("path", "")).path
+    return (
+        path.endswith(".parquet")
+        and os.path.dirname(path) == os.path.abspath(sf_dir)
+        and not os.path.exists(path)
+    )
 
 
 def _record_source(root: str, sf_dir: str) -> None:

@@ -91,6 +91,18 @@ _SCHEMA_CONFS = (
 _SCHEMAS: dict[tuple, tuple[tuple[int, int, int], StructType]] = {}
 
 
+def _file_stamp(path: str) -> tuple[int, int, int] | None:
+    """``(st_ino, st_size, st_mtime_ns)`` of a single local file; None
+    for a directory or a path the local filesystem cannot stat."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if stat.S_ISDIR(st.st_mode):
+        return None
+    return (st.st_ino, st.st_size, st.st_mtime_ns)
+
+
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` with the file's schema cached.
 
@@ -105,14 +117,10 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     ``registry.evict``, which drops plans and pinned data, not file
     metadata.
     """
-    try:
-        st = os.stat(path)
-    except OSError:
+    stamp = _file_stamp(path)
+    if stamp is None:
         return spark.read.parquet(path)  # Spark raises its own error
-    if stat.S_ISDIR(st.st_mode):
-        return spark.read.parquet(path)
     key = (os.path.abspath(path), tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
-    stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
     hit = _SCHEMAS.get(key)
     if hit is not None and hit[0] == stamp:
         return spark.read.schema(hit[1]).parquet(path)
@@ -146,3 +154,34 @@ def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFr
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
     return _read_parquet(spark, path)
+
+
+# path -> (file stamp, row count from the parquet footer)
+_ROW_COUNTS: dict[str, tuple[tuple[int, int, int], int]] = {}
+
+
+def row_count(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> int:
+    """Row count of one table, read from the parquet footer.
+
+    ``load(...).count()`` on the V1 parquet source runs two Spark jobs
+    (partial counts per file split, then the final aggregate); a
+    single-file table's ``num_rows`` already sits in its footer, so
+    this reads it with pyarrow and runs none. The count is cached on
+    the path and the file's ``(st_ino, st_size, st_mtime_ns)`` stamp,
+    like ``_read_parquet``'s schemas. Directories (partitioned
+    datasets) and paths the local filesystem cannot stat fall back to
+    ``load(...).count()``.
+    """
+    import pyarrow.parquet as pq
+
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    stamp = _file_stamp(path)
+    if stamp is None:
+        return load(spark, name, sf_dir).count()
+    key = os.path.abspath(path)
+    hit = _ROW_COUNTS.get(key)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    n = pq.read_metadata(path).num_rows
+    _ROW_COUNTS[key] = (stamp, n)
+    return n

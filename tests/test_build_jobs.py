@@ -1,0 +1,40 @@
+"""Build-job budget: the graph frontier loops read each round's
+predecessor once, so building them is one lazy plan, and the document
+count they need comes from the parquet footer. Building them launches
+no Spark job."""
+
+from __future__ import annotations
+
+import pytest
+
+from cs_pipeline_spark import registry
+from cs_pipeline_spark.operators import graph
+from cs_pipeline_spark.sources.scans import ensure_fixtures
+from cs_pipeline_spark.tables import load
+
+
+def _build_jobs(spark, fn) -> int:
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    fn()
+    return dag.nextJobId() - before
+
+
+@pytest.fixture
+def warm(spark, sf_dir):
+    # setup-time jobs (fixture sweep, schema inference) are not build jobs
+    ensure_fixtures(spark, sf_dir)
+    load(spark, "documents", sf_dir)
+
+
+@pytest.mark.parametrize("op", ["graph_bfs_distance", "graph_label_propagation"])
+def test_frontier_loop_builds_without_jobs(spark, sf_dir, warm, op):
+    registry.evict(op, spark, sf_dir, blocking=True)
+    fn = registry.queries()[op]
+    assert _build_jobs(spark, lambda: fn(spark, sf_dir)) == 0
+
+
+def test_n_docs_runs_no_job(spark, sf_dir, warm):
+    n = []
+    assert _build_jobs(spark, lambda: n.append(graph._n_docs(spark, sf_dir))) == 0
+    assert n == [load(spark, "documents", sf_dir).count()]

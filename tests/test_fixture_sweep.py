@@ -1,14 +1,19 @@
 """sources.scans fixture sweep: failures are reported, not swallowed,
-and scratch inputs live in the checkout that holds the package."""
+fixtures whose source table is absent are marked skipped, and scratch
+inputs live in the checkout that holds the package."""
 
 from __future__ import annotations
 
 import os
+import warnings
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from cs_pipeline_spark import registry
 from cs_pipeline_spark.sources import scans
+from cs_pipeline_spark.tables import load
 
 
 def test_scratch_lives_in_the_package_checkout():
@@ -69,3 +74,54 @@ def test_generations_of_deleted_sf_dirs_are_pruned(spark, tmp_path, monkeypatch)
     assert not os.path.exists(gone_root)
     assert os.path.exists(os.path.join(kept_root, "_fixtures_done"))
     assert os.path.isdir(unrecorded)  # no record: left alone
+
+
+def test_partial_dir_marks_fixtures_of_missing_tables_skipped(spark, tmp_path, monkeypatch):
+    registry._load_all_modules()
+    calls: list[str] = []
+
+    def _fx_ok(spark, sf_dir):
+        calls.append("ok")
+        scans._scratch(sf_dir, "ok")
+
+    def _fx_needs_orders(spark, sf_dir):
+        calls.append("orders")
+        load(spark, "orders", sf_dir).count()  # PATH_NOT_FOUND: no orders here
+
+    monkeypatch.setattr(scans, "_FIXTURES", [_fx_ok, _fx_needs_orders])
+    monkeypatch.setattr(scans, "_ENSURED", set())
+    monkeypatch.setattr(scans, "_SCRATCH", str(tmp_path / "scratch"))
+    sf = tmp_path / "sf_partial"
+    sf.mkdir()
+    pq.write_table(pa.table({"doc_id": pa.array([0, 1], pa.int64())}), str(sf / "documents.parquet"))
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        scans.ensure_fixtures(spark, str(sf))
+    assert calls == ["ok", "orders"]
+    with open(os.path.join(scans.generation_root(str(sf)), "_fixtures_done")) as f:
+        lines = f.read().splitlines()
+    name = f"{_fx_needs_orders.__module__}.{_fx_needs_orders.__qualname__}"
+    assert f"{name} skipped" in lines
+
+    scans._ENSURED.clear()  # a new process
+    scans.ensure_fixtures(spark, str(sf))
+    assert calls == ["ok", "orders"]
+
+
+def test_missing_path_outside_the_sf_dir_still_warns(spark, tmp_path, monkeypatch):
+    registry._load_all_modules()
+
+    def _fx_elsewhere(spark, sf_dir):
+        spark.read.parquet(str(tmp_path / "elsewhere" / "orders.parquet")).count()
+
+    monkeypatch.setattr(scans, "_FIXTURES", [_fx_elsewhere])
+    monkeypatch.setattr(scans, "_ENSURED", set())
+    monkeypatch.setattr(scans, "_SCRATCH", str(tmp_path / "scratch"))
+    sf = tmp_path / "sf_partial"
+    sf.mkdir()
+
+    with pytest.warns(RuntimeWarning, match="PATH_NOT_FOUND"):
+        scans.ensure_fixtures(spark, str(sf))
+    root = scans.generation_root(str(sf))
+    assert not os.path.exists(os.path.join(root, "_fixtures_done"))

@@ -124,6 +124,41 @@ def test_lpa_partition_is_complete(spark, sf_dir):
     assert max(r.size for r in rows) > 1
 
 
+def test_lpa_matches_driver_reference(spark, sf_dir):
+    """Synchronous LPA replayed on the driver: each round every node
+    takes its neighbours' plurality label, ties to the smallest, and a
+    node without neighbours keeps its own."""
+    from collections import Counter
+
+    from cs_pipeline_spark.operators.graph import (
+        _LPA_ITERS,
+        _edges,
+        _n_docs,
+        graph_label_propagation,
+    )
+    from cs_pipeline_spark.tables import load
+
+    docs = load(spark, "documents", sf_dir)
+    nbrs: dict[int, set[int]] = {}
+    for r in _edges(docs, _n_docs(spark, sf_dir)).collect():
+        if r.src != r.dst:
+            nbrs.setdefault(r.src, set()).add(r.dst)
+            nbrs.setdefault(r.dst, set()).add(r.src)
+    label = {r.doc_id: r.doc_id for r in docs.select("doc_id").collect()}
+    for _ in range(_LPA_ITERS):
+        new = {}
+        for v, own in label.items():
+            votes = Counter(label[u] for u in nbrs.get(v, ()) if u in label)
+            new[v] = min(votes, key=lambda x: (-votes[x], x)) if votes else own
+        label = new
+    want = Counter(label.values())
+    got = {
+        r.community: r.size
+        for r in graph_label_propagation(spark, sf_dir).collect()
+    }
+    assert got == dict(want)
+
+
 def test_ljung_box_composes_acf(spark, sf_dir):
     """Q must equal the hand-computed statistic from the registered
     ACF output (same quantization pipeline), and the verdict must
