@@ -3977,12 +3977,15 @@ def ml_adaboost_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     t2v, pol2, w2v = min(cand2_rows, key=lambda c: (c[2], c[0], -c[1]))
     # alpha coefficients: the two lns stay SPARK-evaluated (identical
     # expression trees: exact decimal literals -> string -> double
-    # casts, same zero/saturation guards) over a pure-literal 1-row
-    # projection of spark.range(1) -- a LocalRelation after constant
-    # folding. A createDataFrame-backed row here is a Python-RDD scan
-    # re-executed on EVERY action (measured 0.75 s per count).
+    # casts, same zero/saturation guards) over a 1-row VALUES relation.
+    # Project over a LocalRelation folds into a LocalRelation, so the
+    # collect() below runs no Spark job; the same projection over
+    # spark.range(1) launched one (~24 ms). A createDataFrame-backed
+    # row here is a Python-RDD scan re-executed on EVERY action
+    # (measured 0.75 s per count).
     wtot = 2 * e * (n - e)
-    dlit = lambda x: F.expr(f"CAST('{x}' AS DECIMAL(38,0))")  # noqa: E731
+    dsql = lambda x: f"CAST('{x}' AS DECIMAL(38,0))"  # noqa: E731
+    dlit = lambda x: F.expr(dsql(x))  # noqa: E731
     qln = (
         lambda num, den: F.floor(
             F.lit(0.5)
@@ -3994,10 +3997,9 @@ def ml_adaboost_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.lit(0.5)
         ).cast("long")
     )  # noqa: E731
-    al = spark.range(1).select(
-        dlit(e).alias("e1"),
-        dlit(n).alias("n"),
-        dlit(w2v).alias("w"),
+    al = spark.sql(
+        f"SELECT * FROM VALUES ({dsql(e)}, {dsql(n)}, {dsql(w2v)})"
+        " AS t(e1, n, w)"
     ).select(
         # A PERFECT stump (e1 = 0, or a useless one e1 = n) and a
         # zero/saturated round-2 weighted error make the half-log-
@@ -4029,7 +4031,7 @@ def ml_adaboost_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
             if ((a1q * s1 + a2q * s2) > 0) == (y == 1):
                 ok += cnt
     # final row: the original output expressions over exact literals
-    # (decimal div semantics preserved) -- plan is LocalRelation +
+    # (decimal div semantics preserved) -- plan is a 1-row Range +
     # Project, no fact reference, so every re-count is milliseconds
     row = spark.range(1).select(
         F.lit(t).cast("long").alias("t1"),

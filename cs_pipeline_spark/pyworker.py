@@ -21,6 +21,23 @@ at the last read, and otherwise reuses ``zipimport._zip_directory_cache``.
 A zip that ``addPyFile`` adds or rewrites is therefore still re-read. On
 an interpreter whose ``zipimport`` lacks the internals the patch needs
 (``patchable``), ``zipimport`` stays as it is and only the daemon starts.
+
+The daemon imports pandas and pyarrow before it forks any worker.
+Spark kills a worker after 60 s without a Python task, and every worker
+forked later used to import both again: a 4-task ``mapInPandas`` after
+75 s idle took 1.7-1.9 s, and 0.3-0.8 s with the imports done in the
+daemon (4 cores). The imports start no Python thread, so the daemon
+still forks from a single-threaded interpreter.
+
+``get_spark`` also sets ``spark.python.unix.domain.socket.enabled``, and
+``manager()`` then listens on a Unix-domain socket. Over loopback TCP
+the JVM writer sets no ``TCP_NODELAY`` and neither does the worker, so
+Nagle holds the last small segment of a task's input until the worker
+ACKs it, and Linux delays that ACK by ~40 ms: a 10-row ``mapInPandas``
+task spent 40-44 ms reading its input on a reused connection, against
+0.6-1.7 ms over the Unix socket. A session built without ``get_spark``
+(the driver's vanilla one, ``tools/check.py --vanilla``) uses pyspark's
+own daemon over TCP and still pays it.
 """
 
 from __future__ import annotations
@@ -88,12 +105,19 @@ def patch_zipimport() -> bool:
     return True
 
 
+def preload() -> None:
+    """Import what every Arrow task imports, once, before the first fork."""
+    import pandas  # noqa: F401
+    import pyarrow  # noqa: F401
+
+
 def main() -> None:
     # pyspark.daemon picks the worker module from argv at import time and
     # imports the worker (and pyspark) before we stamp, so the stamped
     # importers are the ones every forked worker inherits
     from pyspark import daemon
 
+    preload()
     patch_zipimport()
     daemon.manager()
 

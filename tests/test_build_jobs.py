@@ -1,7 +1,8 @@
 """Build-job budget: the graph frontier loops read each round's
 predecessor once, so building them is one lazy plan, and the document
 count they need comes from the parquet footer. Building them launches
-no Spark job."""
+no Spark job. ml_adaboost_stumps collects on the driver by design; its
+alpha row is a VALUES relation whose collect() launches none."""
 
 from __future__ import annotations
 
@@ -38,3 +39,12 @@ def test_n_docs_runs_no_job(spark, sf_dir, warm):
     n = []
     assert _build_jobs(spark, lambda: n.append(graph._n_docs(spark, sf_dir))) == 0
     assert n == [load(spark, "documents", sf_dir).count()]
+
+
+def test_adaboost_build_job_budget(spark, sf_dir, warm):
+    op = "ml_adaboost_stumps"
+    fn = registry.queries()[op]
+    fn(spark, sf_dir)  # infers the schemas it reads
+    registry.evict(op, spark, sf_dir, blocking=True)
+    # rank targets 11, vote cells 2, alpha row 0
+    assert _build_jobs(spark, lambda: fn(spark, sf_dir)) == 13

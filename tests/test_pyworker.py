@@ -1,6 +1,7 @@
 """Python-worker boundary: the stamp-checked zip import caches of the
-engine's worker daemon (``cs_pipeline_spark.pyworker``) and the session
-confs that start workers through it from any working directory."""
+engine's worker daemon (``cs_pipeline_spark.pyworker``), its pandas /
+pyarrow preload, and the session confs that start workers through it
+over Unix-domain sockets from any working directory."""
 
 from __future__ import annotations
 
@@ -108,6 +109,52 @@ def test_worker_conf_merges_caller_pythonpath():
     assert worker_conf()["spark.executorEnv.PYTHONPATH"] == PACKAGE_PARENT
 
 
+UDS_KEY = "spark.python.unix.domain.socket.enabled"
+
+
+def test_worker_conf_enables_unix_domain_sockets():
+    assert worker_conf()[UDS_KEY] == "true"
+    # an explicit caller value wins
+    assert worker_conf({UDS_KEY: "false"})[UDS_KEY] == "false"
+
+
+def test_workers_run_over_unix_domain_sockets(spark):
+    assert spark.sparkContext.getConf().get(UDS_KEY) == "true"
+
+    def env(it):
+        import pandas as pd
+
+        for _ in it:
+            yield pd.DataFrame(
+                {"v": [os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", "")]}
+            )
+
+    rows = spark.range(0, 1, 1, 1).mapInPandas(env, "v string").collect()
+    # the executor spells it "True"; pyspark's daemon compares lower-cased
+    assert [r.v.lower() for r in rows] == ["true"]
+
+
+def test_preload_starts_no_thread():
+    """The daemon forks every worker: the preload must leave it with one
+    Python thread."""
+    code = (
+        "import sys, threading\n"
+        "from cs_pipeline_spark import pyworker\n"
+        "pyworker.preload()\n"
+        "assert {'pandas', 'pyarrow'} <= set(sys.modules)\n"
+        "print(threading.active_count())\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=PACKAGE_PARENT,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.split() == ["1"]
+
+
 def test_get_spark_starts_workers_through_the_daemon(spark):
     conf = spark.sparkContext.getConf()
     assert conf.get("spark.python.daemon.module") == DAEMON_MODULE
@@ -139,9 +186,16 @@ def test_python_tasks_run_from_any_working_directory(tmp_path, sf_dir):
             def ident(it):
                 yield from it
 
+            # first Python task of the session: a fresh worker forked
+            # from the daemon already holds the preloaded modules
+            pre = (
+                spark.sparkContext.parallelize([0], 1)
+                .map(lambda _: {{"pandas", "pyarrow"}} <= set(sys.modules))
+                .collect()
+            )
             n = spark.range(0, 10, 1, 2).mapInPandas(ident, "id long").count()
             w = registry.all_specs()["mm_decode_wav"].fn(spark, {sf_dir!r}).count()
-            print("ROWS", n, w)
+            print("ROWS", n, w, pre == [True])
             spark.stop()
             """
         )
@@ -162,3 +216,4 @@ def test_python_tasks_run_from_any_working_directory(tmp_path, sf_dir):
     n, w = int(rows[0][1]), int(rows[0][2])
     assert n == 10
     assert w > 0
+    assert rows[0][3] == "True"
