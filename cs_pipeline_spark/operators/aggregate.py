@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cs_pipeline_spark.functions.era5_fixture import ERA5_CTE, era5_events
-from cs_pipeline_spark.operators.helpers import dround, davg, dsum, sql_davg, sql_dsum, with_total_rank, with_prefix_agg, with_prefix_aggs, one_part
+from cs_pipeline_spark.operators.helpers import dec_to_double, dround, davg, dsum, sql_davg, sql_dsum, with_total_rank, with_prefix_agg, with_prefix_aggs, one_part
 from cs_pipeline_spark.operators.predictors import predictors_cte, predictors_frame
 from cs_pipeline_spark.plans.agg_compiler import (
     active_predictors,
@@ -656,12 +656,12 @@ def agg_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(qy * qy).alias("syy"),
         F.sum(qx * qy).alias("sxy"),
     )
-    d = lambda c: c.cast("string").cast("double")  # noqa: E731
     varx = m.n * m.sxx - m.sx * m.sx
     vary = m.n * m.syy - m.sy * m.sy
     cov = m.n * m.sxy - m.sx * m.sy
     r = F.when(
-        (varx > 0) & (vary > 0), d(cov) / F.sqrt(d(varx) * d(vary))
+        (varx > 0) & (vary > 0),
+        dec_to_double(cov) / F.sqrt(dec_to_double(varx) * dec_to_double(vary)),
     )
     return m.select(
         "l_returnflag",
@@ -719,11 +719,12 @@ def agg_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     qx = F.floor(F.col("l_extendedprice") * F.lit(1e6) + F.lit(0.5)).cast(
         "decimal(19,0)"
     )
-    d = lambda c: c.cast("string").cast("double")  # noqa: E731
     return li.groupBy("l_returnflag").agg(
-        (d(F.sum(qw * qx)) / d(F.sum(qw.cast("decimal(38,0)"))) / F.lit(1e6)).alias(
-            "qty_weighted_price"
-        )
+        (
+            dec_to_double(F.sum(qw * qx))
+            / dec_to_double(F.sum(qw.cast("decimal(38,0)")))
+            / F.lit(1e6)
+        ).alias("qty_weighted_price")
     )
 
 
@@ -931,16 +932,15 @@ def agg_skew_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
     d2 = d * d  # <= 1e12, long
     d3 = d2 * d  # <= 1e18, long
     d4 = d2.cast("decimal(19,0)") * d2.cast("decimal(19,0)")  # decimal
-    dec = lambda c: c.cast("string").cast("double")  # noqa: E731
     s = (
         qv.join(F.broadcast(mn), "event_type")
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("double").alias("n"),
-            dec(F.sum(d.cast("decimal(38,0)"))).alias("s1"),
-            dec(F.sum(d2.cast("decimal(38,0)"))).alias("s2"),
-            dec(F.sum(d3.cast("decimal(38,0)"))).alias("s3"),
-            dec(F.sum(d4)).alias("s4"),
+            dec_to_double(F.sum(d.cast("decimal(38,0)"))).alias("s1"),
+            dec_to_double(F.sum(d2.cast("decimal(38,0)"))).alias("s2"),
+            dec_to_double(F.sum(d3.cast("decimal(38,0)"))).alias("s3"),
+            dec_to_double(F.sum(d4)).alias("s4"),
         )
     )
     n, s1, s2, s3, s4 = (F.col(x) for x in ("n", "s1", "s2", "s3", "s4"))
@@ -1015,13 +1015,12 @@ def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy("event_type").orderBy("q", "event_id")
     rk = qv.withColumn("rn", F.row_number().over(w))
-    dec = lambda c: c.cast("string").cast("double")  # noqa: E731
     s = rk.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        dec(
+        dec_to_double(
             F.sum((F.col("rn") * F.col("q")).cast("decimal(38,0)"))
         ).alias("s_iq"),
-        dec(F.sum(F.col("q").cast("decimal(38,0)"))).alias("s_q"),
+        dec_to_double(F.sum(F.col("q").cast("decimal(38,0)"))).alias("s_q"),
     )
     n, s_iq, s_q = F.col("n"), F.col("s_iq"), F.col("s_q")
     return s.filter(s_q > 0).select(
@@ -1092,13 +1091,14 @@ def agg_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
         F.sum(F.col("x") * F.col("qy")).alias("sxy"),
     )
-    d = lambda c: c.cast("string").cast("double")  # noqa: E731
     den = m.n * m.sxx - m.sx * m.sx
     num = m.n * m.sxy - m.sx * m.sy
     return m.select(
         "user_id",
         F.col("n").cast("long").alias("n_obs"),
-        F.when(den > 0, d(num) / d(den) / F.lit(1e6)).alias("slope_per_sec"),
+        F.when(
+            den > 0, dec_to_double(num) / dec_to_double(den) / F.lit(1e6)
+        ).alias("slope_per_sec"),
     )
 
 
@@ -1377,13 +1377,12 @@ def agg_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(qv.cast("decimal(38,0)")).alias("s1"),
         F.sum(qv * qv).alias("s2"),
     )
-    d = lambda c: c.cast("string").cast("double")  # noqa: E731
     nd = m.n.cast("double")
     stats = m.select(
         "arm",
         m.n.cast("long").alias("n"),
-        (d(m.s1) / nd / F.lit(1e6)).alias("mean"),
-        (d(m.n * m.s2 - m.s1 * m.s1) / (nd * nd) / F.lit(1e12)).alias(
+        (dec_to_double(m.s1) / nd / F.lit(1e6)).alias("mean"),
+        (dec_to_double(m.n * m.s2 - m.s1 * m.s1) / (nd * nd) / F.lit(1e12)).alias(
             "var_pop"
         ),
     )
@@ -2160,7 +2159,7 @@ def agg_jackknife_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) % F.lit(_SPLIT_PRIME) % F.lit(_JK_R)
     b = ev.select("event_type", "value", bkt.alias("bkt"))
     reps = [
-        davg(F.when(F.col("bkt") != r, F.col("value"))).alias(f"m{r}")
+        davg(f"CASE WHEN bkt != {r} THEN value END").alias(f"m{r}")
         for r in range(_JK_R)
     ]
     m = b.groupBy("event_type").agg(
@@ -3058,14 +3057,16 @@ def agg_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("dry") * F.col("dry")).alias("syy"),
         F.sum(F.col("drx") * F.col("dry")).alias("sxy"),
     )
-    d = lambda c: c.cast("string").cast("double")  # noqa: E731
     varx = m.n * m.sxx - m.sx * m.sx
     vary = m.n * m.syy - m.sy * m.sy
     cov = m.n * m.sxy - m.sx * m.sy
     rho = F.when(
         (varx > 0) & (vary > 0),
         F.floor(
-            d(cov) / F.sqrt(d(varx) * d(vary)) * F.lit(1e9) + F.lit(0.5)
+            dec_to_double(cov)
+            / F.sqrt(dec_to_double(varx) * dec_to_double(vary))
+            * F.lit(1e9)
+            + F.lit(0.5)
         )
         / F.lit(1e9),
     )
@@ -3152,9 +3153,8 @@ def agg_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(contrib_q.alias("contrib_q"))
         .agg(F.sum("contrib_q").alias("chi2_q"))
     )
-    d = lambda col: col.cast("string").cast("double")  # noqa: E731
     out = s.crossJoin(F.broadcast(n))
-    chi2 = d(F.col("chi2_q")) / F.lit(1e9)
+    chi2 = dec_to_double(F.col("chi2_q")) / F.lit(1e9)
     k = F.least(F.col("nr"), F.col("nc")).cast("string").cast("double")
     return out.select(
         F.col("n").cast("long").alias("n_rows"),
@@ -3162,7 +3162,7 @@ def agg_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         chi2.alias("chi2"),
         (
             F.floor(
-                F.sqrt(chi2 / (d(F.col("n")) * (k - F.lit(1.0))))
+                F.sqrt(chi2 / (dec_to_double(F.col("n")) * (k - F.lit(1.0))))
                 * F.lit(1e9)
                 + F.lit(0.5)
             )
@@ -3248,7 +3248,6 @@ def agg_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = o.groupBy("lang").agg(F.sum("obs").alias("rt"))
     c = o.groupBy("source").agg(F.sum("obs").alias("ct"))
     n = o.agg(F.sum("obs").alias("n"))
-    dd = lambda col: col.cast("string").cast("double")  # noqa: E731
     q9 = lambda col: F.floor(col * F.lit(1e9) + F.lit(0.5)).cast(d38)  # noqa: E731
     mi_t = (
         o.join(F.broadcast(r), "lang")
@@ -3256,10 +3255,10 @@ def agg_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n))
         .select(
             q9(
-                (dd(F.col("obs")) / dd(F.col("n")))
+                (dec_to_double(F.col("obs")) / dec_to_double(F.col("n")))
                 * F.log(
-                    dd(F.col("obs") * F.col("n"))
-                    / dd(F.col("rt") * F.col("ct"))
+                    dec_to_double(F.col("obs") * F.col("n"))
+                    / dec_to_double(F.col("rt") * F.col("ct"))
                 )
             ).alias("t")
         )
@@ -3269,8 +3268,8 @@ def agg_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
         r.join(F.broadcast(n))
         .select(
             q9(
-                -(dd(F.col("rt")) / dd(F.col("n")))
-                * F.log(dd(F.col("rt")) / dd(F.col("n")))
+                -(dec_to_double(F.col("rt")) / dec_to_double(F.col("n")))
+                * F.log(dec_to_double(F.col("rt")) / dec_to_double(F.col("n")))
             ).alias("t")
         )
         .agg(F.sum("t").alias("hr"))
@@ -3279,8 +3278,8 @@ def agg_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.join(F.broadcast(n))
         .select(
             q9(
-                -(dd(F.col("ct")) / dd(F.col("n")))
-                * F.log(dd(F.col("ct")) / dd(F.col("n")))
+                -(dec_to_double(F.col("ct")) / dec_to_double(F.col("n")))
+                * F.log(dec_to_double(F.col("ct")) / dec_to_double(F.col("n")))
             ).alias("t")
         )
         .agg(F.sum("t").alias("hc"))
@@ -3293,13 +3292,13 @@ def agg_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return s.select(
         "n_cells",
-        (dd(F.col("mi")) / F.lit(1e9)).alias("mi_nats"),
-        (dd(F.col("hr")) / F.lit(1e9)).alias("h_lang_nats"),
-        (dd(F.col("hc")) / F.lit(1e9)).alias("h_source_nats"),
+        (dec_to_double(F.col("mi")) / F.lit(1e9)).alias("mi_nats"),
+        (dec_to_double(F.col("hr")) / F.lit(1e9)).alias("h_lang_nats"),
+        (dec_to_double(F.col("hc")) / F.lit(1e9)).alias("h_source_nats"),
         (
             F.floor(
-                dd(F.col("mi"))
-                / dd(F.least(F.col("hr"), F.col("hc")))
+                dec_to_double(F.col("mi"))
+                / dec_to_double(F.least(F.col("hr"), F.col("hc")))
                 * F.lit(1e9)
                 + F.lit(0.5)
             )
@@ -3707,7 +3706,7 @@ def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     m = w.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        davg(F.col("xq").cast("double") / F.lit(1e6)).alias("theta"),
+        davg("CAST(xq AS DOUBLE) / 1000000.0D").alias("theta"),
         *reps,
     )
     ms = F.array_sort(F.array(*[F.col(f"m{b}") for b in range(_BOOT_B)]))

@@ -70,7 +70,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey)),
         s.s_nationkey == n.n_nationkey,
     ).select("s_suppkey", "s_nationkey", "n_name")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    rev = "l_extendedprice * (1 - l_discount)"
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -121,9 +121,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sn = s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey).select(
         "s_suppkey", F.col("n_name").alias("nation")
     )
-    profit = F.col("l_extendedprice") * (1 - F.col("l_discount")) - F.col(
-        "p_retailprice"
-    ) * F.col("l_quantity")
+    profit = "l_extendedprice * (1 - l_discount) - p_retailprice * l_quantity"
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .join(F.broadcast(sn), li.l_suppkey == sn.s_suppkey)
@@ -224,7 +222,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             & F.col("l_quantity").between(20, 30)
         )
     )
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    rev = "l_extendedprice * (1 - l_discount)"
     return j.filter(cond).agg(dsum(rev).alias("revenue"))
 
 
@@ -334,7 +332,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             & F.col("l_discount").between(0.05, 0.07)
             & (F.col("l_quantity") < 24)
         )
-        .agg(dsum(F.col("l_extendedprice") * F.col("l_discount")).alias("revenue"))
+        .agg(dsum("l_extendedprice * l_discount").alias("revenue"))
     )
 
 
@@ -390,7 +388,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair = (
         (F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2")
     ) | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    rev = "l_extendedprice * (1 - l_discount)"
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(cn), o.o_custkey == cn.c_custkey)
@@ -468,7 +466,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     sn = s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey).select(
         "s_suppkey", F.col("n_name").alias("supp_nation")
     )
-    volume = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    volume = "l_extendedprice * (1 - l_discount)"
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .join(o, li.l_orderkey == o.o_orderkey)
@@ -477,7 +475,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
             dsum(
-                F.when(F.col("supp_nation") == "NATION_3", volume).otherwise(0.0)
+                f"CASE WHEN supp_nation = 'NATION_3' THEN {volume} ELSE 0.0D END"
             ).alias("focal_volume"),
             dsum(volume).alias("total_volume"),
         )
@@ -523,7 +521,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = load(spark, "lineitem", sf_dir).filter(F.col("l_returnflag") == "R")
     n = load(spark, "nation", sf_dir)
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    rev = "l_extendedprice * (1 - l_discount)"
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -856,9 +854,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = load(spark, "supplier", sf_dir)
     rev = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
-            "total_revenue"
-        )
+        dsum("l_extendedprice * (1 - l_discount)").alias("total_revenue")
     )
     mx = rev.agg(F.max("total_revenue").alias("mx"))
     return (
@@ -1044,11 +1040,11 @@ def features_user_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
     )
     anchor = F.broadcast(ev.agg(F.max("us").alias("max_us")))
-    pv = F.when(F.col("event_type") == "purchase", F.col("value"))
+    pv = "CASE WHEN event_type = 'purchase' THEN value END"
     u = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.countDistinct("d").alias("active_days"),
-        F.count(pv).alias("n_purchases"),
+        F.count(F.expr(pv)).alias("n_purchases"),
         dsum(pv).alias("monetary"),
         F.max("us").alias("last_us"),
         F.min("us").alias("first_us"),

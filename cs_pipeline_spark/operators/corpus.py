@@ -35,7 +35,7 @@ from cs_pipeline_spark.operators.dedup import (
     _tokens,
     shingles,
 )
-from cs_pipeline_spark.operators.helpers import dround, one_part
+from cs_pipeline_spark.operators.helpers import dec_to_double, dround, one_part
 from cs_pipeline_spark.registry import pin, register
 from cs_pipeline_spark.tables import load
 
@@ -895,10 +895,9 @@ def corpus_length_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("n_toks") * F.col("n_toks")).alias("sxx"),
         F.sum(F.col("dr_q") * F.col("dr_q")).alias("syy"),
     )
-    dd = lambda c: c.cast("string").cast("double")  # noqa: E731
-    num = dd(F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
-    vx = dd(F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
-    vy = dd(F.col("n") * F.col("syy") - F.col("sy") * F.col("sy"))
+    num = dec_to_double(F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
+    vx = dec_to_double(F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
+    vy = dec_to_double(F.col("n") * F.col("syy") - F.col("sy") * F.col("sy"))
     return m.filter((vx > 0) & (vy > 0)).select(
         "lang",
         F.col("n").cast("long").alias("n_docs"),

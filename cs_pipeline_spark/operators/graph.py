@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cs_pipeline_spark.operators.helpers import dround
+from cs_pipeline_spark.operators.helpers import dec_to_double, dround
 from cs_pipeline_spark.registry import register
 from cs_pipeline_spark.tables import load, row_count
 
@@ -884,14 +884,16 @@ def graph_degree_assortativity(
         F.sum(F.col("y") * F.col("y")).alias("syy"),
         F.sum(F.col("x") * F.col("y")).alias("sxy"),
     )
-    d = lambda c: c.cast("string").cast("double")  # noqa: E731
     varx = m.n * m.sxx - m.sx * m.sx
     vary = m.n * m.syy - m.sy * m.sy
     cov = m.n * m.sxy - m.sx * m.sy
     r = F.when(
         (varx > 0) & (vary > 0),
         F.floor(
-            d(cov) / F.sqrt(d(varx) * d(vary)) * F.lit(1e9) + F.lit(0.5)
+            dec_to_double(cov)
+            / F.sqrt(dec_to_double(varx) * dec_to_double(vary))
+            * F.lit(1e9)
+            + F.lit(0.5)
         )
         / F.lit(1e9),
     )
@@ -987,7 +989,6 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast(d38).alias("deg"),
     )
     m = lab.agg(F.count(F.lit(1)).cast(d38).alias("m2"))
-    d = lambda c: c.cast("string").cast("double")  # noqa: E731
     s = comm.crossJoin(F.broadcast(m)).agg(
         F.count(F.lit(1)).cast("long").alias("n_communities"),
         F.max("m2").alias("m2"),
@@ -999,8 +1000,8 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("m2").cast("long").alias("n_edge_ends"),
         (
             F.floor(
-                (d(F.col("sei")) / d(F.col("m2"))
-                 - d(F.col("sd2")) / (d(F.col("m2")) * d(F.col("m2"))))
+                (dec_to_double("sei") / dec_to_double("m2")
+                 - dec_to_double("sd2") / (dec_to_double("m2") * dec_to_double("m2")))
                 * F.lit(1e9)
                 + F.lit(0.5)
             )

@@ -1,4 +1,4 @@
-"""Hash-stable aggregate builders (Spark Column + DuckDB SQL twins).
+"""Hash-stable aggregates: one SQL template per aggregate, two dialects.
 
 The driver verifies every query by order-insensitive VALUE HASH against
 a DuckDB oracle. Two engine-difference traps make naive double
@@ -34,204 +34,167 @@ any cluster topology (a property a production pipeline wants anyway).
 Cost: one multiply+floor per row pre-shuffle — negligible.
 ``min``/``max``/``max_by`` need no treatment (exact, order-free).
 
-TRAP: when the aggregated expression is a raw FLOAT column, wrap it
-in ``CAST(... AS DOUBLE)`` on the DuckDB side — DuckDB's
-FLOAT*DOUBLE arithmetic does not match Spark's float→double
-promotion (observed: one-quantum drift in sim_ivf_kmeans until the
-explicit cast). Spark's Column path promotes exactly.
+Each aggregate is ONE SQL template (``render_*``) rendered through a
+two-entry dialect table (``SPARK_SQL``, ``DUCKDB_SQL``) that holds only
+what differs between the engines. ``dsum``/``davg``/``dvar_pop``/
+``dstd_pop`` parse the Spark render with ``F.expr``: one parse instead
+of a Column tree of 150-300 py4j round trips (q1_pricing_summary's
+build fell from 1,279 to 221 round trips). ``sql_*`` return the DuckDB
+render.
+Aggregate arguments are Spark SQL text; a decimal literal inside one
+needs the ``D`` suffix (``ELSE 0.0D``), or it parses as DECIMAL.
 """
 
 from __future__ import annotations
 
 from functools import partial
+from typing import NamedTuple
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from cs_pipeline_spark.registry import concurrently
 
-Q1 = 1000000.0  # quantum⁻¹ for first moments (6 dp)
-Q2 = 1000000000000.0  # Q1² for second moments
-
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def _nn(col: Column | str) -> Column:
-    """NaN→null + float→double promotion on the aggregated expression.
+class Dialect(NamedTuple):
+    """What the Spark SQL and DuckDB renders of a template differ in."""
+
+    nan_guard: str  # NaN→NULL over ``{d}``, the input promoted to DOUBLE
+    dbl: str  # suffix that makes a literal DOUBLE
+    sum_int: str  # exact integer type of Σq in the variance numerator
+    sq_int: str  # ... of each factor of q·q
+    n_int: str  # ... of the count factor
+    string: str  # the string carrier between exact integers and DOUBLE
+    max_by: str
+    min_by: str
+
+
+SPARK_SQL = Dialect(
+    nan_guard="nanvl({d}, CAST(NULL AS DOUBLE))",
+    dbl="D",
+    sum_int="DECIMAL(38,0)",
+    sq_int="DECIMAL(19,0)",
+    n_int="DECIMAL(20,0)",
+    string="STRING",
+    max_by="max_by",
+    min_by="min_by",
+)
+DUCKDB_SQL = Dialect(
+    nan_guard="(CASE WHEN ISNAN({d}) THEN NULL ELSE {d} END)",
+    dbl="",
+    sum_int="HUGEINT",
+    sq_int="HUGEINT",
+    n_int="HUGEINT",
+    string="VARCHAR",
+    max_by="arg_max",
+    min_by="arg_min",
+)
+
+
+def _skipna(expr: str, t: Dialect) -> str:
+    """NaN→NULL + float→double promotion of the aggregated expression.
 
     Makes every deterministic aggregate *skipna* (xarray semantics,
-    /root/reference/pipeline/carbonpipeline/dataset.py:144) at the
+    reference ``carbonpipeline/dataset.py:144``) at the
     expression level, where it costs one codegen op per row and — unlike
     an ingest-wide projection — cannot block parquet filter pushdown on
-    the raw columns. The explicit double cast also closes the
-    FLOAT*DOUBLE promotion trap (module docstring) on both engines.
+    the raw columns. The explicit double cast also makes a FLOAT input
+    promote identically in both engines (DuckDB's FLOAT*DOUBLE
+    arithmetic otherwise drifts by a quantum).
     """
-    d = _c(col).cast("double")
-    return F.nanvl(d, F.lit(None).cast("double"))
+    return t.nan_guard.format(d=f"CAST(({expr}) AS DOUBLE)")
 
 
-def _quant(c: Column) -> Column:
+def _quantized(nn: str, t: Dialect) -> str:
     # exact in both engines: *, + are correctly-rounded IEEE, floor exact
-    return F.floor(c * F.lit(Q1) + F.lit(0.5))
+    return f"FLOOR(({nn}) * 1000000.0{t.dbl} + 0.5{t.dbl})"
 
 
-def _dec_to_double(c: Column) -> Column:
-    return c.cast("string").cast("double")
+def _carried(exact: str, t: Dialect) -> str:
+    """An exact integer or decimal as the correctly rounded DOUBLE."""
+    return f"CAST(CAST({exact} AS {t.string}) AS DOUBLE)"
 
 
-def dsum(col: Column | str) -> Column:
-    """Engine-agnostic skipna sum: Σ round₆(x), exact integer-decimal
-    path; NaN treated as missing (``_nn``)."""
-    q = _quant(_nn(col))
-    return _dec_to_double(F.sum(q.cast("decimal(38,0)"))) / F.lit(Q1)
+def dec_to_double(col: Column | str) -> Column:
+    """``_carried`` as a Column: exact decimal → string → double."""
+    return _c(col).cast("string").cast("double")
 
 
-def davg(col: Column | str) -> Column:
-    """Engine-agnostic skipna mean: exact quantized sum / non-NaN
-    non-null count."""
-    return dsum(col) / F.count(_nn(col))
+def render_dsum(expr: str, t: Dialect) -> str:
+    """Skipna sum Σ round₆(x) over the exact integer-decimal path."""
+    q = _quantized(_skipna(expr, t), t)
+    return f"({_carried(f'SUM(CAST({q} AS DECIMAL(38,0)))', t)} / 1000000.0{t.dbl})"
 
 
-def _var_numerator(col: Column | str) -> Column:
-    """Exact integer numerator n·Σq² − (Σq)² of the population variance
-    of the quantized values (×Q2·n² the real variance).
+def render_davg(expr: str, t: Dialect) -> str:
+    """Skipna mean: the exact quantized sum / the non-NaN non-null count."""
+    return f"({render_dsum(expr, t)} / COUNT({_skipna(expr, t)}))"
 
-    The subtraction happens in exact DECIMAL integer arithmetic, so the
-    catastrophic cancellation of the naive E[x²]−E[x]² float formula is
-    impossible: a constant group yields exactly 0. Value bounds (|x| ≤
-    1e7, group size ≤ 1e5) keep every intermediate < 1e37 < decimal(38).
+
+def render_dvar_pop(expr: str, t: Dialect) -> str:
+    """Population variance (n·Σq² − (Σq)²) / n² / 1e12 of the quantized
+    values; null (not 0.0) on an all-null group — xarray-skipna, ddof=0
+    (reference ``carbonpipeline/core.py:217-248``).
+
+    The numerator is exact integer arithmetic, so the catastrophic
+    cancellation of the naive E[x²]−E[x]² float formula is impossible:
+    a constant group yields exactly 0. Value bounds (|x| ≤ 1e7, group
+    size ≤ 1e5) keep every intermediate < 1e37 < decimal(38). Only the
+    final divisions are float, each correctly rounded identically in
+    both engines. In Spark, Σq is the same expression ``dsum``
+    aggregates, so mean+std on one column share one sum buffer.
     """
-    c = _nn(col)
-    q = _quant(c)
-    # s1 is the IDENTICAL expression dsum/davg aggregate — Catalyst
-    # dedups equal aggregate expressions, so mean+std on one column
-    # share one sum buffer instead of computing two.
-    s1 = F.sum(q.cast("decimal(38,0)"))
-    # NOTE: a long-split variant (q = h·2¹⁶+l, three long products
-    # summed separately) was benchmarked and is SLOWER — three
-    # decimal sum buffers cost more than one per-row decimal multiply.
-    s2 = F.sum(
-        q.cast("decimal(19,0)") * q.cast("decimal(19,0)")
-    )  # q² ≤ 1e26 → exact in decimal(38,0)
-    n = F.count(c).cast("decimal(20,0)")
-    return s2 * n - s1 * s1  # capped decimal(38,0); values ≤ ~1e34, exact
-
-
-def dvar_pop(col: Column | str) -> Column:
-    """Engine-agnostic population variance from the exact integer
-    numerator: (n·Σq² − (Σq)²) / n² / Q2 — only the final divisions are
-    float, each correctly rounded identically in Spark and DuckDB.
-
-    Null (not 0.0) on an all-null group — xarray-skipna semantics
-    (/root/reference/pipeline/carbonpipeline/core.py:217-248, ddof=0).
-    """
-    c = _nn(col)
-    nd = F.count(c).cast("double")
-    num = _dec_to_double(_var_numerator(c))
-    return F.when(F.count(c) > 0, num / (nd * nd) / F.lit(Q2))
-
-
-def dstd_pop(col: Column | str) -> Column:
-    """Engine-agnostic population stddev: sqrt of ``dvar_pop``."""
-    return F.sqrt(dvar_pop(col))
-
-
-# --- Spark SQL twins (r11): ONE parsed expression instead of the
-# Column-object tree. Building davg/dstd via the Column API costs
-# ~90 py4j round trips per aggregate (measured: compile_agg_schema
-# alone was 1.3 s / 9631 round trips of the resample build); F.expr
-# of the identical SQL is one. Literals carry the D suffix so they
-# parse as DOUBLE exactly like F.lit(1e6) (a bare 1000000.0 parses
-# as DECIMAL and would change the arithmetic). Must mirror the
-# Column builders above EXACTLY — the resample hash gate pins it.
-
-
-def spark_sql_nn(expr: str) -> str:
-    """Spark-SQL twin of ``_nn``."""
-    return f"nanvl(CAST(({expr}) AS DOUBLE), CAST(NULL AS DOUBLE))"
-
-
-def _spark_sql_quant(nn: str) -> str:
-    return f"FLOOR(({nn}) * 1000000.0D + 0.5D)"
-
-
-def spark_sql_dsum(expr: str) -> str:
-    """Spark-SQL twin of ``dsum``."""
-    q = _spark_sql_quant(spark_sql_nn(expr))
-    return (
-        f"(CAST(CAST(SUM(CAST({q} AS DECIMAL(38,0))) AS STRING) "
-        f"AS DOUBLE) / 1000000.0D)"
-    )
-
-
-def spark_sql_davg(expr: str) -> str:
-    """Spark-SQL twin of ``davg``."""
-    return f"({spark_sql_dsum(expr)} / COUNT({spark_sql_nn(expr)}))"
-
-
-def spark_sql_dstd_pop(expr: str) -> str:
-    """Spark-SQL twin of ``dstd_pop`` (population variance from the
-    exact integer numerator, sqrt at the end)."""
-    nn = spark_sql_nn(expr)
-    q = _spark_sql_quant(nn)
-    s1 = f"SUM(CAST({q} AS DECIMAL(38,0)))"
-    s2 = f"SUM(CAST({q} AS DECIMAL(19,0)) * CAST({q} AS DECIMAL(19,0)))"
-    num = f"({s2} * CAST(COUNT({nn}) AS DECIMAL(20,0)) - {s1} * {s1})"
+    nn = _skipna(expr, t)
+    q = _quantized(nn, t)
+    s1 = f"SUM(CAST({q} AS {t.sum_int}))"
+    s2 = f"SUM(CAST({q} AS {t.sq_int}) * CAST({q} AS {t.sq_int}))"
+    num = f"({s2} * CAST(COUNT({nn}) AS {t.n_int}) - {s1} * {s1})"
     nd = f"CAST(COUNT({nn}) AS DOUBLE)"
     return (
-        f"SQRT(CASE WHEN COUNT({nn}) > 0 THEN "
-        f"((CAST(CAST({num} AS STRING) AS DOUBLE) / ({nd} * {nd})) "
-        f"/ 1000000000000.0D) END)"
+        f"CASE WHEN COUNT({nn}) > 0 THEN "
+        f"(({_carried(num, t)} / ({nd} * {nd})) / 1000000000000.0{t.dbl}) END"
     )
 
 
-# --- DuckDB SQL twins (must mirror the expressions above exactly) ---
+def render_dstd_pop(expr: str, t: Dialect) -> str:
+    """Population stddev: sqrt of ``render_dvar_pop``."""
+    return f"SQRT({render_dvar_pop(expr, t)})"
 
 
-def _sql_nn(expr: str) -> str:
-    # mirror of ``_nn``: NaN→NULL + double promotion, identical skipna
-    # semantics on the oracle side
-    d = f"CAST(({expr}) AS DOUBLE)"
-    return f"(CASE WHEN ISNAN({d}) THEN NULL ELSE {d} END)"
+def dsum(expr: str) -> Column:
+    return F.expr(render_dsum(expr, SPARK_SQL))
+
+
+def davg(expr: str) -> Column:
+    return F.expr(render_davg(expr, SPARK_SQL))
+
+
+def dvar_pop(expr: str) -> Column:
+    return F.expr(render_dvar_pop(expr, SPARK_SQL))
+
+
+def dstd_pop(expr: str) -> Column:
+    return F.expr(render_dstd_pop(expr, SPARK_SQL))
 
 
 def sql_dsum(expr: str) -> str:
-    e = _sql_nn(expr)
-    return (
-        "(CAST(CAST(SUM(CAST(FLOOR((" + e + ") * 1000000.0 + 0.5) "
-        "AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE) / 1000000.0)"
-    )
+    return render_dsum(expr, DUCKDB_SQL)
 
 
 def sql_davg(expr: str) -> str:
-    return f"({sql_dsum(expr)} / COUNT({_sql_nn(expr)}))"
-
-
-def _sql_var_numerator(expr: str) -> str:
-    # HUGEINT (int128) mirrors Spark's decimal(38,0): the n·Σq² − (Σq)²
-    # subtraction is exact integer arithmetic in BOTH engines.
-    e = _sql_nn(expr)
-    q = f"CAST(FLOOR(({e}) * 1000000.0 + 0.5) AS HUGEINT)"
-    return (
-        f"(SUM({q} * {q}) * CAST(COUNT({e}) AS HUGEINT)"
-        f" - SUM({q}) * SUM({q}))"
-    )
+    return render_davg(expr, DUCKDB_SQL)
 
 
 def sql_dvar_pop(expr: str) -> str:
-    e = _sql_nn(expr)
-    n = f"CAST(COUNT({e}) AS DOUBLE)"
-    num = f"CAST(CAST({_sql_var_numerator(expr)} AS VARCHAR) AS DOUBLE)"
-    return (
-        f"CASE WHEN COUNT({e}) > 0 THEN "
-        f"(({num} / ({n} * {n})) / 1000000000000.0) END"
-    )
+    return render_dvar_pop(expr, DUCKDB_SQL)
 
 
 def sql_dstd_pop(expr: str) -> str:
-    return f"SQRT({sql_dvar_pop(expr)})"
+    return render_dstd_pop(expr, DUCKDB_SQL)
 
 
 def dround(col: Column | str, digits: int = 6) -> Column:
@@ -247,7 +210,8 @@ def dround(col: Column | str, digits: int = 6) -> Column:
     negatives — consistent everywhere.
     """
     q = float(10**digits)
-    return F.floor(_c(col) * F.lit(q) + F.lit(0.5)) / F.lit(q)
+    # bare floats become the same DOUBLE literals as F.lit, one py4j call fewer each
+    return F.floor(_c(col) * q + 0.5) / q
 
 
 def sql_dround(expr: str, digits: int = 6) -> str:

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cs_pipeline_spark.operators.dedup import _NORM, _NORM_DUCK
-from cs_pipeline_spark.operators.helpers import with_rank_targets, with_total_rank, one_part, literal_df
+from cs_pipeline_spark.operators.helpers import dec_to_double, dround, with_rank_targets, with_total_rank, one_part, literal_df
 from cs_pipeline_spark.registry import pin, register
 from cs_pipeline_spark.tables import load
 
@@ -470,7 +470,6 @@ def ml_linreg_normal(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n") * F.col("s1y") - F.col("sx1") * F.col("sy")).alias("c1y"),
         (F.col("n") * F.col("s2y") - F.col("sx2") * F.col("sy")).alias("c2y"),
     )
-    d = lambda col: F.col(col).cast("string").cast("double")  # noqa: E731
     qz = lambda x: F.floor(x * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)  # noqa: E731
     det = F.col("c11") * F.col("c22") - F.col("c12") * F.col("c12")
     num1 = F.col("c1y") * F.col("c22") - F.col("c2y") * F.col("c12")
@@ -497,11 +496,11 @@ def ml_linreg_normal(spark: SparkSession, sf_dir: str) -> DataFrame:
         "b2",
         qz(
             (
-                d("sy") / F.lit(1e6)
-                - F.col("b1") * d("sx1")
-                - F.col("b2") * d("sx2")
+                dec_to_double("sy") / F.lit(1e6)
+                - F.col("b1") * dec_to_double("sx1")
+                - F.col("b2") * dec_to_double("sx2")
             )
-            / d("n")
+            / dec_to_double("n")
         ).alias("b0"),
     )
 
@@ -1386,15 +1385,14 @@ def ml_gmm_em_step(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.lit(1000000000) - F.col("r1")).cast(d38) * F.col("x")
         ).alias("sx2"),
     )
-    d = lambda c: F.col(c).cast("string").cast("double")  # noqa: E731
     q6o = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return m.select(
         F.col("n").cast("long").alias("n_rows"),
         (F.col("mu1_0").cast("double") / F.lit(1e6)).alias("mu1_init"),
         (F.col("mu2_0").cast("double") / F.lit(1e6)).alias("mu2_init"),
-        q6o(d("sx1") / d("s1") / F.lit(1e6)).alias("mu1_new"),
-        q6o(d("sx2") / d("s2") / F.lit(1e6)).alias("mu2_new"),
-        q6o(d("s1") / (F.col("n").cast("double") * F.lit(1e9))).alias(
+        q6o(dec_to_double("sx1") / dec_to_double("s1") / F.lit(1e6)).alias("mu1_new"),
+        q6o(dec_to_double("sx2") / dec_to_double("s2") / F.lit(1e6)).alias("mu2_new"),
+        q6o(dec_to_double("s1") / (F.col("n").cast("double") * F.lit(1e9))).alias(
             "w1_new"
         ),
     )
@@ -1551,13 +1549,12 @@ def agg_t_test_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("d").alias("s1"),
         F.sum(F.col("d") * F.col("d")).alias("s2"),
     )
-    d = lambda c: c.cast("string").cast("double")  # noqa: E731
     var_num = m.n * m.s2 - m.s1 * m.s1
     t = F.when(
         (m.n > 1) & (var_num > 0),
         F.floor(
-            d(m.s1)
-            / F.sqrt(var_num.cast("string").cast("double") / d(m.n - 1))
+            dec_to_double(m.s1)
+            / F.sqrt(var_num.cast("string").cast("double") / dec_to_double(m.n - 1))
             * F.lit(1e9)
             + F.lit(0.5)
         )
@@ -1566,7 +1563,10 @@ def agg_t_test_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.select(
         F.col("n").cast("long").alias("n_pairs"),
         (
-            F.floor(d(m.s1) / d(m.n) / F.lit(1e6) * F.lit(1e6) + F.lit(0.5))
+            F.floor(
+                dec_to_double(m.s1) / dec_to_double(m.n) / F.lit(1e6) * F.lit(1e6)
+                + F.lit(0.5)
+            )
             / F.lit(1e6)
         ).alias("mean_diff"),
         t.alias("t_stat"),
@@ -1674,10 +1674,9 @@ def ml_shap_global(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n") * F.col("s1y") - F.col("sx1") * F.col("sy")).alias("c1y"),
         (F.col("n") * F.col("s2y") - F.col("sx2") * F.col("sy")).alias("c2y"),
     )
-    dd = lambda col: col.cast("string").cast("double")  # noqa: E731
     det = F.col("c11") * F.col("c22") - F.col("c12") * F.col("c12")
     pb = lambda num: F.floor(  # noqa: E731
-        dd(num) / dd(det) / F.lit(1e6) * F.lit(1e9) + F.lit(0.5)
+        dec_to_double(num) / dec_to_double(det) / F.lit(1e6) * F.lit(1e9) + F.lit(0.5)
     ).cast(d38)
     b = c.select(
         "n",
@@ -1801,7 +1800,6 @@ def agg_bayes_beta_posterior(
         )
     )
     mean = (F.col("x") + 1).cast("double") / (F.col("n") + 2)
-    q6 = lambda col: F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     q9 = lambda col: F.floor(col * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)  # noqa: E731
     return c.select(
         F.col("variant").cast("long").alias("variant"),
@@ -1811,8 +1809,8 @@ def agg_bayes_beta_posterior(
         .cast("long")
         .alias("post_mean_ppm"),
         q9(F.sqrt(var)).alias("post_std"),
-        q6(mean - F.lit(2.0) * F.sqrt(var)).alias("credible_lo"),
-        q6(mean + F.lit(2.0) * F.sqrt(var)).alias("credible_hi"),
+        dround(mean - F.lit(2.0) * F.sqrt(var)).alias("credible_lo"),
+        dround(mean + F.lit(2.0) * F.sqrt(var)).alias("credible_hi"),
     )
 
 
@@ -2170,18 +2168,22 @@ def agg_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("post").cast(d38) * F.col("post")).alias("syy"),
         F.sum(F.col("pre").cast(d38) * F.col("post")).alias("sxy"),
     )
-    d = lambda c: c.cast("string").cast("double")  # noqa: E731
     cov = m.n * m.sxy - m.sx * m.sy
     varx = m.n * m.sxx - m.sx * m.sx
     vary = m.n * m.syy - m.sy * m.sy
     return m.select(
         F.col("n").cast("long").alias("n_users"),
         (
-            F.floor(d(cov) / d(varx) * F.lit(1e9) + F.lit(0.5)) / F.lit(1e9)
+            F.floor(dec_to_double(cov) / dec_to_double(varx) * F.lit(1e9) + F.lit(0.5))
+            / F.lit(1e9)
         ).alias("theta"),
         (
             F.floor(
-                (F.lit(1.0) - (d(cov) * d(cov)) / (d(varx) * d(vary)))
+                (
+                    F.lit(1.0)
+                    - (dec_to_double(cov) * dec_to_double(cov))
+                    / (dec_to_double(varx) * dec_to_double(vary))
+                )
                 * F.lit(1e6)
                 + F.lit(0.5)
             )
@@ -2250,19 +2252,18 @@ def agg_ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("m").cast(d38)).alias("s1"),
         F.sum(F.col("m").cast(d38) * F.col("m")).alias("s2"),
     )
-    d = lambda c: c.cast("string").cast("double")  # noqa: E731
     q6o = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     var_num = s.n * s.s2 - s.s1 * s.s1
-    var_per_user = d(var_num) / (d(s.n) * d(s.n))
+    var_per_user = dec_to_double(var_num) / (dec_to_double(s.n) * dec_to_double(s.n))
     return s.select(
         F.col("n").cast("long").alias("n_users"),
-        q6o(d(F.col("s1")) / d(F.col("n")) / F.lit(1e6)).alias("mean_metric"),
-        q6o(F.sqrt(d(var_num)) / d(F.col("n")) / F.lit(1e6)).alias(
+        q6o(dec_to_double("s1") / dec_to_double("n") / F.lit(1e6)).alias("mean_metric"),
+        q6o(F.sqrt(dec_to_double(var_num)) / dec_to_double("n") / F.lit(1e6)).alias(
             "std_metric"
         ),
         q6o(
             F.lit(2.801585)
-            * F.sqrt(F.lit(2.0) * var_per_user / (d(F.col("n")) / F.lit(2.0)))
+            * F.sqrt(F.lit(2.0) * var_per_user / (dec_to_double("n") / F.lit(2.0)))
             / F.lit(1e6)
         ).alias("mde_abs"),
     )

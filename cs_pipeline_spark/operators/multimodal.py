@@ -47,6 +47,7 @@ from pyspark.sql.types import (
 )
 
 from cs_pipeline_spark.operators.helpers import (
+    dec_to_double,
     dround,
     literal_df,
     metric_rows,
@@ -760,14 +761,16 @@ def mm_text_embed_consistency(
         F.sum(F.col("y") * F.col("y")).alias("syy"),
         F.sum(F.col("x") * F.col("y")).alias("sxy"),
     )
-    d = lambda c: c.cast("string").cast("double")  # noqa: E731
     varx = m.n * m.sxx - m.sx * m.sx
     vary = m.n * m.syy - m.sy * m.sy
     cov = m.n * m.sxy - m.sx * m.sy
     r = F.when(
         (varx > 0) & (vary > 0),
         F.floor(
-            d(cov) / F.sqrt(d(varx) * d(vary)) * F.lit(1e9) + F.lit(0.5)
+            dec_to_double(cov)
+            / F.sqrt(dec_to_double(varx) * dec_to_double(vary))
+            * F.lit(1e9)
+            + F.lit(0.5)
         )
         / F.lit(1e9),
     )

@@ -32,7 +32,7 @@ from pyspark.sql.types import (
 )
 
 from cs_pipeline_spark.functions.era5_fixture import ERA5_CTE, era5_events
-from cs_pipeline_spark.functions.physics import predictor_col, predictor_sql
+from cs_pipeline_spark.functions.physics import predictor_sql
 from cs_pipeline_spark.operators.helpers import davg, sql_davg
 from cs_pipeline_spark.registry import register
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
@@ -169,7 +169,7 @@ def process_point_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         *[
             davg(
-                F.round(predictor_col(p), 6) if p == "RH" else predictor_col(p)
+                f"ROUND({predictor_sql(p)}, 6)" if p == "RH" else predictor_sql(p)
             ).alias(f"{p}_ERA5")
             for p in _PREDS
         ]

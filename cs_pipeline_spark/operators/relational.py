@@ -32,8 +32,8 @@ CUTOFF = "1998-09-02 00:00:00"
 
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, "lineitem", sf_dir)
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc_price * (1 + F.col("l_tax"))
+    disc_price = "l_extendedprice * (1 - l_discount)"
+    charge = f"{disc_price} * (1 + l_tax)"
     return (
         li.filter(F.col("l_shipdate") <= F.to_timestamp(F.lit(CUTOFF)))
         .groupBy("l_returnflag", "l_linestatus")
@@ -98,7 +98,7 @@ def top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate") < F.to_timestamp(F.lit("1998-03-15"))
     )
     l = load(spark, "lineitem", sf_dir)
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    rev = "l_extendedprice * (1 - l_discount)"
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -213,7 +213,7 @@ def parts_by_supplier_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load(spark, "part", sf_dir).filter(F.col("p_size") <= 25)
     s = load(spark, "supplier", sf_dir)
     n = load(spark, "nation", sf_dir)
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    rev = "l_extendedprice * (1 - l_discount)"
     return (
         l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
         .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)

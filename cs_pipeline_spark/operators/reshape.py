@@ -81,7 +81,7 @@ def reshape_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ev.groupBy("user_id")
         .pivot("event_type", _EVENT_TYPES)
-        .agg(dsum(F.when(F.col("event_type").isNotNull(), F.col("value"))))
+        .agg(dsum("CASE WHEN event_type IS NOT NULL THEN value END"))
     )
 
 

@@ -144,9 +144,7 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("skew_key")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            dsum(F.col("l_extendedprice") * F.col("factor")).alias(
-                "weighted_price"
-            ),
+            dsum("l_extendedprice * factor").alias("weighted_price"),
         )
     )
 
@@ -261,9 +259,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_items"),
-            dsum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            ).alias("revenue"),
+            dsum("l_extendedprice * (1 - l_discount)").alias("revenue"),
         )
     )
 

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cs_pipeline_spark.operators.dedup import _sql_qdot, qdot
-from cs_pipeline_spark.operators.helpers import sql_davg, with_rank_targets, one_part, literal_df
+from cs_pipeline_spark.operators.helpers import dround, sql_davg, with_rank_targets, one_part, literal_df
 from cs_pipeline_spark.registry import pin, register
 from cs_pipeline_spark.tables import load, row_count
 
@@ -1155,7 +1155,7 @@ def emb_centroid_per_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         dims.groupBy("label", "pos")
-        .agg(davg(F.col("v").cast("double")).alias("val"))
+        .agg(davg("CAST(v AS DOUBLE)").alias("val"))
         .select(
             F.col("label").cast("long").alias("label"),
             F.col("pos").cast("long").alias("pos"),
@@ -2467,8 +2467,6 @@ def emb_outlier_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n") > 1) & (num > 0),
         (F.expr("d2 div 1000000").cast("double") - mean) / std,
     )
-    from cs_pipeline_spark.operators.helpers import dround
-
     return (
         dd.join(F.broadcast(m), dd.label == m.mlabel)
         .withColumn("zscore", z)
@@ -3648,7 +3646,6 @@ def emb_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_vecs").alias("n_b"), F.col("nrm_q").alias("qb")
     )
     q9 = lambda c: F.floor(c * 1000000000.0 + F.lit(0.5)) / 1000000000.0  # noqa: E731
-    q6 = lambda c: F.floor(c * 1000000.0 + F.lit(0.5)) / 1000000.0  # noqa: E731
     return (
         ha.crossJoin(hb)
         .crossJoin(shift)
@@ -3659,12 +3656,12 @@ def emb_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sqrt(F.col("ss").cast("string").cast("double"))
                 / 1000000.0
             ).alias("centroid_shift"),
-            q6(
+            dround(
                 F.col("qa").cast("string").cast("double")
                 / F.col("n_a")
                 / 1000000.0
             ).alias("mean_sqnorm_a"),
-            q6(
+            dround(
                 F.col("qb").cast("string").cast("double")
                 / F.col("n_b")
                 / 1000000.0
@@ -3764,16 +3761,15 @@ def emb_isotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("nq"),
         )
     )
-    q6 = lambda c: F.floor(c * 1000000.0 + F.lit(0.5)) / 1000000.0  # noqa: E731
     css = F.col("css").cast("string").cast("double") / 1e12
     msn = (
         F.col("nq").cast("string").cast("double") / F.col("n_vecs") / 1e6
     )
     return cn.crossJoin(mn).select(
         F.col("n_vecs").cast("long").alias("n_vecs"),
-        q6(css).alias("centroid_sqnorm"),
-        q6(msn).alias("mean_sqnorm"),
-        q6(F.lit(1.0) - css / msn).alias("isotropy"),
+        dround(css).alias("centroid_sqnorm"),
+        dround(msn).alias("mean_sqnorm"),
+        dround(F.lit(1.0) - css / msn).alias("isotropy"),
     )
 
 

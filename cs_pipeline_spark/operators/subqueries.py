@@ -211,8 +211,8 @@ def q_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1997-10-01").cast("timestamp"))
     )
     p = load(spark, "part", sf_dir)
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0))
+    rev = "l_extendedprice * (1 - l_discount)"
+    promo = f"CASE WHEN p_type = 'PROMO' THEN {rev} ELSE 0.0D END"
     joined = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
     return joined.agg(
         dsum(promo).alias("promo_revenue"),

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from cs_pipeline_spark.operators.helpers import with_prefix_agg, with_rank_targets, with_total_rank, one_part, literal_df
+from cs_pipeline_spark.operators.helpers import dec_to_double, dround, with_prefix_agg, with_rank_targets, with_total_rank, one_part, literal_df
 from cs_pipeline_spark.registry import pin, register
 from cs_pipeline_spark.tables import EVENTS_TS_SQL, load
 
@@ -95,13 +95,12 @@ def ts_ewma_dyadic(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    d = lambda c: c.cast("string").cast("double")  # noqa: E731
     return t.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_used"),
         (
             F.floor(
-                d(F.sum(F.col("qv") * F.col("w")))
-                / d(F.sum("w"))
+                dec_to_double(F.sum(F.col("qv") * F.col("w")))
+                / dec_to_double(F.sum("w"))
                 / F.lit(1e6)
                 * F.lit(1e9)
                 + F.lit(0.5)
@@ -205,15 +204,17 @@ def ts_fourier_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("sqd") * F.col("qs")).alias("b"),
         F.sum("sqd").alias("s"),
     )
-    d = lambda c: F.col(c).cast("string").cast("double")  # noqa: E731
     return m.select(
         F.col("period").cast("long").alias("period_h"),
         "n_hours",
         (
             F.floor(
-                F.sqrt(d("a") * d("a") + d("b") * d("b"))
+                F.sqrt(
+                    dec_to_double("a") * dec_to_double("a")
+                    + dec_to_double("b") * dec_to_double("b")
+                )
                 / F.lit(1e9)
-                / d("s")
+                / dec_to_double("s")
                 * F.lit(1e9)
                 + F.lit(0.5)
             )
@@ -630,14 +631,12 @@ def ts_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("b"),
         )
     den = float(4**_HOLT_T)
-    d = lambda c_: c_.cast("string").cast("double")  # noqa: E731
-    q6 = lambda c_: F.floor(c_ * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return state.select(
         "event_type",
-        q6(d(F.col("l")) / F.lit(den) / F.lit(1e6)).alias("level"),
-        q6(d(F.col("b")) / F.lit(den) / F.lit(1e6)).alias("trend"),
-        q6(
-            d(F.col("l") + F.lit(_HOLT_H) * F.col("b"))
+        dround(dec_to_double(F.col("l")) / F.lit(den) / F.lit(1e6)).alias("level"),
+        dround(dec_to_double(F.col("b")) / F.lit(den) / F.lit(1e6)).alias("trend"),
+        dround(
+            dec_to_double(F.col("l") + F.lit(_HOLT_H) * F.col("b"))
             / F.lit(den)
             / F.lit(1e6)
         ).alias(f"forecast_{_HOLT_H}d"),
@@ -729,15 +728,14 @@ def agg_gumbel_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("m").cast(d38)).alias("s1"),
         F.sum(F.col("m").cast(d38) * F.col("m")).alias("s2"),
     )
-    d = lambda c: F.col(c).cast("string").cast("double")  # noqa: E731
     q6 = lambda c: F.floor(c / F.lit(1e6) * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
-    mean = d("s1") / d("n")
+    mean = dec_to_double("s1") / dec_to_double("n")
     var_num = (
         (F.col("n") * F.col("s2") - F.col("s1") * F.col("s1"))
         .cast("string")
         .cast("double")
     )
-    beta = F.lit(_G_SQRT6_PI) * F.sqrt(var_num) / d("n")
+    beta = F.lit(_G_SQRT6_PI) * F.sqrt(var_num) / dec_to_double("n")
     mu = mean - F.lit(_G_EULER) * beta
     return mo.select(
         F.col("n").cast("long").alias("n_blocks"),
@@ -1401,14 +1399,13 @@ def agg_overdispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("c").cast(d38)).alias("s1"),
         F.sum(F.col("c").cast(d38) * F.col("c")).alias("s2"),
     )
-    d = lambda c: c.cast("string").cast("double")  # noqa: E731
     var_num = m.n * m.s2 - m.s1 * m.s1
-    vmr = d(var_num) / d(m.n * m.s1)
+    vmr = dec_to_double(var_num) / dec_to_double(m.n * m.s1)
     return m.select(
         "event_type",
         F.col("n").cast("long").alias("n_hours"),
         (
-            F.floor(d(F.col("s1")) / d(F.col("n")) * F.lit(1e6) + F.lit(0.5))
+            F.floor(dec_to_double("s1") / dec_to_double("n") * F.lit(1e6) + F.lit(0.5))
             / F.lit(1e6)
         ).alias("mean_count"),
         F.when(
@@ -1627,7 +1624,6 @@ def ts_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
             - 1
         ).alias("ridx"),
     )
-    d = lambda c: c.cast("string").cast("double")  # noqa: E731
     per_scale = []
     for s in _HURST_SCALES:
         blk = F.expr(f"ridx div {s}")
@@ -1661,9 +1657,9 @@ def ts_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select(
                 F.floor(
-                    d(F.col("cmax") - F.col("cmin"))
+                    dec_to_double(F.col("cmax") - F.col("cmin"))
                     / F.sqrt(
-                        d(
+                        dec_to_double(
                             F.col("sxx") * F.lit(s)
                             - F.col("sx") * F.col("sx")
                         )
@@ -1801,11 +1797,10 @@ def ts_xcorr_leadlag(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
         F.sum(F.col("y") * F.col("y")).alias("syy"),
     )
-    d = lambda c: c.cast("string").cast("double")  # noqa: E731
-    num = d(F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
+    num = dec_to_double(F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
     den = F.sqrt(
-        d(F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
-        * d(F.col("n") * F.col("syy") - F.col("sy") * F.col("sy"))
+        dec_to_double(F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
+        * dec_to_double(F.col("n") * F.col("syy") - F.col("sy") * F.col("sy"))
     )
     r = m.filter(F.col("n") > 1).select(
         "event_type",

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cs_pipeline_spark.functions.era5_fixture import ERA5_CTE, era5_events
-from cs_pipeline_spark.operators.helpers import dround, one_part, literal_df
+from cs_pipeline_spark.operators.helpers import dec_to_double, dround, one_part, literal_df
 from cs_pipeline_spark.registry import register
 from cs_pipeline_spark.tables import EVENTS_TS_SQL, load
 
@@ -1483,7 +1483,6 @@ def win_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(has, F.col("yq") * F.col("yq"))).alias("syy"),
         F.sum(F.col("yp") * F.col("yp")).alias("spp"),
     )
-    d = lambda c: c.cast("string").cast("double")  # noqa: E731
     vy = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
     vp = F.col("n") * F.col("spp") - F.col("sp") * F.col("sp")
     cov = F.col("n") * F.col("syp") - F.col("sy") * F.col("sp")
@@ -1492,7 +1491,9 @@ def win_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             F.col("n").cast("long").alias("n_pairs"),
-            F.round(d(cov) / F.sqrt(d(vy) * d(vp)), 6).alias("acf1"),
+            F.round(
+                dec_to_double(cov) / F.sqrt(dec_to_double(vy) * dec_to_double(vp)), 6
+            ).alias("acf1"),
         )
     )
 
@@ -2254,12 +2255,11 @@ def agg_interarrival_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s2") * F.col("n").cast("decimal(38,0)")
         - F.col("s1") * F.col("s1")
     ).cast("string").cast("double")
-    q6 = lambda c: F.floor(c * 1000000.0 + F.lit(0.5)) / 1000000.0  # noqa: E731
     return m.select(
         "event_type",
         F.col("n").cast("long").alias("n"),
-        q6(s1d / F.col("n") / 1000000.0).alias("mean_gap_s"),
-        q6(num / (s1d * s1d)).alias("cv_squared"),
+        dround(s1d / F.col("n") / 1000000.0).alias("mean_gap_s"),
+        dround(num / (s1d * s1d)).alias("cv_squared"),
     )
 
 
@@ -2368,11 +2368,10 @@ def agg_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
         F.sum(F.col("y") * F.col("y")).alias("syy"),
     )
-    d = lambda c: c.cast("string").cast("double")  # noqa: E731
-    num = d(F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
+    num = dec_to_double(F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
     den = F.sqrt(
-        d(F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
-        * d(F.col("n") * F.col("syy") - F.col("sy") * F.col("sy"))
+        dec_to_double(F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
+        * dec_to_double(F.col("n") * F.col("syy") - F.col("sy") * F.col("sy"))
     )
     return m.filter(F.col("n") > 1).select(
         "event_type",
@@ -2454,9 +2453,8 @@ def agg_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("dq").alias("sd"),
         F.sum(F.col("dq") * F.col("dq")).alias("sdd"),
     )
-    d = lambda c: c.cast("string").cast("double")  # noqa: E731
-    var_r = d(F.col("n") * F.col("srr") - F.col("sr") * F.col("sr"))
-    var_d = d(F.col("n") * F.col("sdd") - F.col("sd") * F.col("sd"))
+    var_r = dec_to_double(F.col("n") * F.col("srr") - F.col("sr") * F.col("sr"))
+    var_d = dec_to_double(F.col("n") * F.col("sdd") - F.col("sd") * F.col("sd"))
     fs = F.greatest(F.lit(0.0), F.lit(1.0) - var_r / var_d)
     return m.filter(var_d > 0).select(
         "event_type",

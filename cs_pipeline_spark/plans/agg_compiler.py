@@ -30,13 +30,15 @@ from pyspark.sql import functions as F
 
 from cs_pipeline_spark.functions.constants import AGG_SCHEMA
 from cs_pipeline_spark.operators.helpers import (
-    spark_sql_davg,
-    spark_sql_dstd_pop,
-    spark_sql_dsum,
-    sql_davg,
-    sql_dstd_pop,
-    sql_dsum,
+    DUCKDB_SQL,
+    SPARK_SQL,
+    Dialect,
+    render_davg,
+    render_dstd_pop,
+    render_dsum,
 )
+
+_TEMPLATES = {"mean": render_davg, "std": render_dstd_pop, "sum": render_dsum}
 
 
 def active_predictors(granularity: str, predictors: list[str] | None = None) -> list[str]:
@@ -45,42 +47,41 @@ def active_predictors(granularity: str, predictors: list[str] | None = None) -> 
     return [p for p in preds if AGG_SCHEMA[p][granularity] != "DROP"]
 
 
+def _render_agg_schema(
+    granularity: str,
+    predictors: list[str] | None,
+    order_col: str,
+    t: Dialect,
+) -> list[tuple[str, str]]:
+    """(output name, SQL aggregate in dialect ``t``) for every
+    (predictor, output) pair, in schema order."""
+    out: list[tuple[str, str]] = []
+    for p in active_predictors(granularity, predictors):
+        for name, kind in AGG_SCHEMA[p][granularity].items():
+            if kind in _TEMPLATES:
+                e = _TEMPLATES[kind](p, t)
+            elif kind in ("min", "max"):
+                e = f"{kind.upper()}({p})"
+            elif kind == "delta":
+                e = f"({t.max_by}({p}, {order_col}) - {t.min_by}({p}, {order_col}))"
+            else:  # pragma: no cover
+                raise ValueError(f"unknown agg kind {kind!r} for {p}")
+            out.append((name, e))
+    return out
+
+
 def compile_agg_schema(
     granularity: str,
     predictors: list[str] | None = None,
     order_col: str = "valid_time",
 ) -> list[Column]:
-    """Spark aggregate Columns for every (predictor, output) pair.
-
-    r11: each aggregate is ONE ``F.expr`` of the helpers' Spark-SQL
-    twin instead of a Column-object tree — the Column path cost ~90
-    py4j round trips per aggregate (1.3 s of the resample build for
-    ~100 aggregates); the parsed expressions are identical (the
-    resample hash gate pins it).
-    """
-    out: list[Column] = []
-    for p in active_predictors(granularity, predictors):
-        spec = AGG_SCHEMA[p][granularity]
-        for name, kind in spec.items():
-            if kind == "mean":
-                e = spark_sql_davg(p)
-            elif kind == "std":
-                e = spark_sql_dstd_pop(p)
-            elif kind == "min":
-                e = f"MIN({p})"
-            elif kind == "max":
-                e = f"MAX({p})"
-            elif kind == "sum":
-                e = spark_sql_dsum(p)
-            elif kind == "delta":
-                e = (
-                    f"(max_by({p}, {order_col}) "
-                    f"- min_by({p}, {order_col}))"
-                )
-            else:  # pragma: no cover
-                raise ValueError(f"unknown agg kind {kind!r} for {p}")
-            out.append(F.expr(e).alias(name))
-    return out
+    """Spark aggregate Columns for every (predictor, output) pair: ONE
+    ``F.expr`` each (a Column-object tree cost ~90 py4j round trips per
+    aggregate, 1.3 s of the resample build for ~100 aggregates)."""
+    return [
+        F.expr(e).alias(name)
+        for name, e in _render_agg_schema(granularity, predictors, order_col, SPARK_SQL)
+    ]
 
 
 def compile_agg_schema_sql(
@@ -88,24 +89,8 @@ def compile_agg_schema_sql(
     predictors: list[str] | None = None,
     order_col: str = "valid_time",
 ) -> list[str]:
-    """DuckDB SQL twins of :func:`compile_agg_schema` (same order)."""
-    out: list[str] = []
-    for p in active_predictors(granularity, predictors):
-        spec = AGG_SCHEMA[p][granularity]
-        for name, kind in spec.items():
-            if kind == "mean":
-                e = sql_davg(p)
-            elif kind == "std":
-                e = sql_dstd_pop(p)
-            elif kind == "min":
-                e = f"MIN({p})"
-            elif kind == "max":
-                e = f"MAX({p})"
-            elif kind == "sum":
-                e = sql_dsum(p)
-            elif kind == "delta":
-                e = f"(arg_max({p}, {order_col}) - arg_min({p}, {order_col}))"
-            else:  # pragma: no cover
-                raise ValueError(f"unknown agg kind {kind!r} for {p}")
-            out.append(f"{e} AS {name}")
-    return out
+    """DuckDB twins of :func:`compile_agg_schema` (same order)."""
+    return [
+        f"{e} AS {name}"
+        for name, e in _render_agg_schema(granularity, predictors, order_col, DUCKDB_SQL)
+    ]

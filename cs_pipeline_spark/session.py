@@ -21,7 +21,8 @@ one you would set on a 1000-executor cluster too:
   operators' pickled functions from any driver working directory.
   Workers connect over Unix-domain sockets, which have no Nagle /
   delayed-ACK stall (~40 ms per reused-worker task over TCP; see
-  ``worker_conf``).
+  ``worker_conf``). The socket files live in one directory per driver
+  process, removed when the process exits.
 - Driver JVM class-data-sharing archive (``jvmarchive``) — a local
   driver starts from a memory-mapped AppCDS archive of the classes an
   earlier session loaded, instead of parsing and verifying them again
@@ -34,7 +35,10 @@ one you would set on a 1000-executor cluster too:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -45,6 +49,35 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 DAEMON_MODULE = "cs_pipeline_spark.pyworker"
 # directory that holds the ``cs_pipeline_spark`` package
 PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+SOCKET_DIR_KEY = "spark.python.unix.domain.socket.dir"
+# Spark names a socket <dir>/.<uuid>.sock; sun_path holds 107 bytes
+_SOCKET_NAME = len("/.") + 36 + len(".sock")
+_SUN_PATH_MAX = 107
+_socket_dir: str | None = None
+
+
+def _remove_socket_dir(path: str, owner: int) -> None:
+    if os.getpid() == owner:  # not in a forked child that exits
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def socket_dir() -> str:
+    """This driver process's directory for Unix-domain socket files,
+    created on first use and removed at interpreter exit.
+
+    Spark's default, ``java.io.tmpdir``, keeps every socket file whose
+    owner did not close it cleanly: a session that exits without
+    ``stop()`` left one or two ``/tmp/.<uuid>.sock`` files per run.
+    """
+    global _socket_dir
+    if _socket_dir is None:
+        parent = tempfile.gettempdir()
+        if len(parent) + len("/csps-") + 8 + _SOCKET_NAME > _SUN_PATH_MAX:
+            parent = "/tmp"
+        _socket_dir = tempfile.mkdtemp(prefix="csps-", dir=parent)
+        atexit.register(_remove_socket_dir, _socket_dir, os.getpid())
+    return _socket_dir
 
 
 def worker_conf(extra_conf: dict[str, str] | None = None) -> dict[str, str]:
@@ -63,7 +96,8 @@ def worker_conf(extra_conf: dict[str, str] | None = None) -> dict[str, str]:
     cores). The same conf moves the driver's ``collect()``/``toPandas()``
     result servers to Unix sockets too. Sessions built without
     ``get_spark`` still pay the stall: the driver's own vanilla session
-    and ``tools/check.py --vanilla``.
+    and ``tools/check.py --vanilla``. The socket files go to
+    ``socket_dir()``, which is removed when the driver process exits.
     """
     conf = dict(extra_conf or {})
     key = "spark.executorEnv.PYTHONPATH"
@@ -73,6 +107,8 @@ def worker_conf(extra_conf: dict[str, str] | None = None) -> dict[str, str]:
     conf[key] = os.pathsep.join(paths)
     conf.setdefault("spark.python.daemon.module", DAEMON_MODULE)
     conf.setdefault("spark.python.unix.domain.socket.enabled", "true")
+    if SOCKET_DIR_KEY not in conf:
+        conf[SOCKET_DIR_KEY] = socket_dir()
     return conf
 
 

@@ -60,7 +60,7 @@ def nan_to_null(df: DataFrame) -> DataFrame:
     goes empty), which at the 100 TB design point turns row-group
     pruning into full scans. The driver tables are NaN-free by
     construction, and the deterministic aggregate helpers
-    (``operators/helpers._nn``) skip NaN at the expression level on
+    (``operators/helpers._skipna``) skip NaN at the expression level on
     both engines, so skipna parity holds without the scan-side cost.
     """
     from pyspark.sql.types import DoubleType, FloatType

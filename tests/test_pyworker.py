@@ -7,8 +7,10 @@ from __future__ import annotations
 
 import importlib
 import os
+import shutil
 import subprocess
 import sys
+import tempfile
 import textwrap
 import zipfile
 import zipimport
@@ -217,3 +219,64 @@ def test_python_tasks_run_from_any_working_directory(tmp_path, sf_dir):
     assert n == 10
     assert w > 0
     assert rows[0][3] == "True"
+
+
+def test_session_without_stop_leaves_no_socket_file(tmp_path):
+    """A driver that runs a Python task and a ``toPandas()`` and exits
+    without ``stop()``: its socket files sat in its own socket directory,
+    not in ``java.io.tmpdir``, and that directory is gone once the
+    process has exited."""
+    # short enough for a socket path, as Spark's default /tmp is
+    jvm_tmp = tempfile.mkdtemp(prefix="jvm-", dir="/tmp")
+    script = tmp_path / "drive.py"
+    script.write_text(
+        textwrap.dedent(
+            f"""
+            import os, sys
+            sys.path.insert(0, {PACKAGE_PARENT!r})
+            from cs_pipeline_spark.session import SOCKET_DIR_KEY, get_spark
+
+            spark = get_spark(
+                "socket_probe",
+                shuffle_partitions=2,
+                extra_conf={{
+                    "spark.driver.extraJavaOptions": "-Djava.io.tmpdir={jvm_tmp}"
+                }},
+            )
+
+            def ident(it):
+                yield from it
+
+            pdf = spark.range(0, 10, 1, 2).mapInPandas(ident, "id long").toPandas()
+            d = spark.sparkContext.getConf().get(SOCKET_DIR_KEY)
+            socks = [f for f in os.listdir(d) if f.endswith(".sock")]
+            print("DIR", d)
+            print("ROWS", len(pdf), len(socks))
+            """
+        )
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    # a TMPDIR too long for a socket path falls back to /tmp
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g", TMPDIR=str(tmp_path))
+    try:
+        proc = subprocess.run(
+            [sys.executable, str(script)],
+            cwd=tmp_path,
+            env=env,
+            capture_output=True,
+            text=True,
+            timeout=600,
+        )
+        left = [f for f in os.listdir(jvm_tmp) if f.endswith(".sock")]
+    finally:
+        shutil.rmtree(jvm_tmp, ignore_errors=True)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert not left, left
+    out = dict(
+        ln.split(" ", 1) for ln in proc.stdout.splitlines() if ln[:4] in ("DIR ", "ROWS")
+    )
+    assert len(os.path.join(out["DIR"], f".{'0' * 36}.sock")) <= 107
+    rows, socks = map(int, out["ROWS"].split())
+    assert rows == 10
+    assert socks >= 1  # the daemon's socket lived in the socket directory
+    assert not os.path.exists(out["DIR"])

@@ -63,50 +63,3 @@ def test_km_empty_seed_returns_null_trace(spark):
     assert inertias == [None, None]
     assert _km_assign_df(eqs, cids, C).count() == 0
 
-
-def test_spark_sql_agg_twins_match_column_builders(spark):
-    """The r11 F.expr twins (spark_sql_dsum/davg/dstd_pop) must be
-    bit-identical to the Column builders they replaced in
-    compile_agg_schema — including NaN-skipna, all-null groups, float
-    promotion, and decimal-tie values."""
-    import pyspark.sql.functions as F
-
-    from cs_pipeline_spark.operators.helpers import (
-        davg,
-        dstd_pop,
-        dsum,
-        spark_sql_davg,
-        spark_sql_dstd_pop,
-        spark_sql_dsum,
-    )
-
-    vals = [
-        (0, 1.5), (0, float("nan")), (0, -2.25e-7), (0, 0.1),
-        (1, None), (1, None),
-        (2, 3.0000005), (2, -0.0), (2, 1e6),
-    ]
-    df = spark.createDataFrame(vals, "g int, x double").withColumn(
-        "xf", F.col("x").cast("float")
-    )
-    for colname in ("x", "xf"):
-        got = df.groupBy("g").agg(
-            F.expr(spark_sql_dsum(colname)).alias("s"),
-            F.expr(spark_sql_davg(colname)).alias("a"),
-            F.expr(spark_sql_dstd_pop(colname)).alias("d"),
-        )
-        ref = df.groupBy("g").agg(
-            dsum(colname).alias("s"),
-            davg(colname).alias("a"),
-            dstd_pop(colname).alias("d"),
-        )
-        g = {r["g"]: (r["s"], r["a"], r["d"]) for r in got.collect()}
-        r = {r["g"]: (r["s"], r["a"], r["d"]) for r in ref.collect()}
-        for k in r:
-            for gv, rv in zip(g[k], r[k]):
-                if gv is None or rv is None:
-                    assert gv is None and rv is None, (colname, k, gv, rv)
-                else:
-                    import struct
-                    assert struct.pack("d", gv) == struct.pack("d", rv), (
-                        colname, k, gv, rv
-                    )

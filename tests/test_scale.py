@@ -58,9 +58,7 @@ def test_salted_join_matches_plain(spark):
         .groupBy("skew_key")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            dsum(F.col("l_extendedprice") * F.col("factor")).alias(
-                "weighted_price"
-            ),
+            dsum("l_extendedprice * factor").alias("weighted_price"),
         )
         .collect()
     }
