@@ -27,6 +27,9 @@ needed).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import reduce
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -1454,9 +1457,8 @@ def text_bpe_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The argmax is a 1-row broadcast; the rewrite is expression-side
     string work per word TYPE. Further iterations repeat this op's
-    shape with the merge table growing by one row per step — at real
-    training scale the loop runs k times with a ``localCheckpoint``
-    per round (the iterative-op convention, CLAUDE.md).
+    shape with the merge table growing by one row per step — the
+    training ops run k rounds through ``_merge_train``.
 
     Scale: same bounds as text_bpe_pair_stats — word types, not
     corpus tokens; the only new stage is a 1-row broadcast join.
@@ -1502,85 +1504,70 @@ def text_bpe_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "text_bpe_train3",
-    f"""
-    WITH {_BPE_WC_SQL},
-    sp0 AS MATERIALIZED (
-      SELECT ' ' || trim(regexp_replace(w, '(.)', '\\1  ', 'g')) || ' '
-               AS s, wn FROM wc),
-    p1 AS (SELECT wn, unnest(list_transform(
-             range(1, greatest(len(string_split(trim(s), '  ')) - 1, 0) + 1),
-             i -> string_split(trim(s), '  ')[CAST(i AS INT)] || ' ' ||
-                  string_split(trim(s), '  ')[CAST(i AS INT) + 1])) AS pair
-           FROM sp0),
-    t1 AS MATERIALIZED (SELECT pair, CAST(SUM(wn) AS BIGINT) AS n
-      FROM p1 GROUP BY pair ORDER BY n DESC, pair LIMIT 1),
-    sp1 AS MATERIALIZED (
-      SELECT replace(s, ' ' || replace(t1.pair, ' ', '  ') || ' ',
-                     ' ' || replace(t1.pair, ' ', '') || ' ') AS s, wn
-      FROM sp0, t1),
-    p2 AS (SELECT wn, unnest(list_transform(
-             range(1, greatest(len(string_split(trim(s), '  ')) - 1, 0) + 1),
-             i -> string_split(trim(s), '  ')[CAST(i AS INT)] || ' ' ||
-                  string_split(trim(s), '  ')[CAST(i AS INT) + 1])) AS pair
-           FROM sp1),
-    t2 AS MATERIALIZED (SELECT pair, CAST(SUM(wn) AS BIGINT) AS n
-      FROM p2 GROUP BY pair ORDER BY n DESC, pair LIMIT 1),
-    sp2 AS MATERIALIZED (
-      SELECT replace(s, ' ' || replace(t2.pair, ' ', '  ') || ' ',
-                     ' ' || replace(t2.pair, ' ', '') || ' ') AS s, wn
-      FROM sp1, t2),
-    p3 AS (SELECT wn, unnest(list_transform(
-             range(1, greatest(len(string_split(trim(s), '  ')) - 1, 0) + 1),
-             i -> string_split(trim(s), '  ')[CAST(i AS INT)] || ' ' ||
-                  string_split(trim(s), '  ')[CAST(i AS INT) + 1])) AS pair
-           FROM sp2),
-    t3 AS (SELECT pair, CAST(SUM(wn) AS BIGINT) AS n
-      FROM p3 GROUP BY pair ORDER BY n DESC, pair LIMIT 1)
-    SELECT CAST(1 AS BIGINT) AS step, pair AS merged, n FROM t1
-    UNION ALL SELECT CAST(2 AS BIGINT), pair, n FROM t2
-    UNION ALL SELECT CAST(3 AS BIGINT), pair, n FROM t3
-    """,
-    doc="BPE tokenizer training, 3 full iterations in-engine: the "
-    "ordered merge table (step, merged pair, frequency at selection "
-    "time) — mixed-width symbols round 2+, boundary-safe rewrite "
-    "(double-space separators + sentinels so a merged token can never "
-    "match the tail of a longer symbol)",
-)
-def text_bpe_train3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Three BPE training iterations (Sennrich et al. 2016), the loop
-    the single-step ops unroll. Word types are rewritten between
-    rounds as sentinel-wrapped, double-space-separated symbol strings:
-    the search pattern ``' a  b '`` can only match whole adjacent
-    symbols (never the tail of a longer symbol like ``ter``), and the
-    single-space replacement ``' ab '`` restores both separators, so
-    adjacent occurrences sharing a boundary still merge in one
-    leftmost-non-overlapping pass — exactly the BPE greedy rule.
+# ---------- BPE / WordPiece merge training (one loop, two argmaxes) ----------
+#
+# Training repeats the find/merge pair of the two ops above. Word types
+# are carried between rounds as sentinel-wrapped, double-space-separated
+# symbol strings (``' a  b  c '``): the search pattern ``' a  b '`` can
+# only match whole adjacent symbols (never the tail of a longer symbol
+# like ``ter``), and the single-space replacement ``' ab '`` restores
+# both separators, so adjacent occurrences sharing a boundary still
+# merge in one leftmost-non-overlapping pass — exactly the BPE greedy
+# rule. The helpers below are the only code that spells this format
+# (tests/test_tokenizer_guard.py keeps it that way).
 
-    Each round's argmax is a 1-row frame cross-joined back (lazy,
-    deterministic n-desc/pair-asc tie-break); the symbol-string frame
-    is referenced twice per round (argmax + rewrite), so rounds are
-    cut with ``localCheckpoint`` on Spark and ``AS MATERIALIZED`` in
-    the oracle (the iterative-op convention — plans would double per
-    round otherwise).
-
-    Scale: all state is word TYPES (Zipf-bounded) × a ≤3-row merge
-    table; pair counting is one map-side-combined aggregate per round.
-    Real BPE training (k≈30000 merges) runs this exact shape with the
-    merge table growing by one row per round.
-    """
-
-    return _bpe_train(spark, sf_dir, 3)
+_SPACED_SQL = "' ' || trim(regexp_replace(w, '(.)', '\\1  ', 'g')) || ' '"
 
 
-# ---------- N-round BPE training (the depth-general loop) ----------
+def _spaced(w: Column) -> Column:
+    """Word → spaced symbol string (one symbol per character)."""
+    return F.concat(
+        F.lit(" "), F.trim(F.regexp_replace(w, "(.)", "$1  ")), F.lit(" ")
+    )
 
-_BPE_TRAIN_N = 8
+
+def _symbols(s: Column) -> Column:
+    """Spaced symbol string → its symbol list."""
+    return F.split(F.trim(s), "  ")
 
 
-def _bpe_pair_cte(k: int, src: str) -> str:
-    """Pair-explode CTE over a spaced-symbol frame (oracle side)."""
+def _merge(s: Column, pair: str) -> Column:
+    """Apply the learned merge ``pair`` ('a b') as literal patterns."""
+    return F.replace(
+        s,
+        F.lit(" " + pair.replace(" ", "  ") + " "),
+        F.lit(" " + pair.replace(" ", "") + " "),
+    )
+
+
+def _merge_sql(s: str, pair: str) -> str:
+    """Oracle form of ``_merge``; ``pair`` is a SQL expression."""
+    return (
+        f"replace({s}, ' ' || replace({pair}, ' ', '  ') || ' ', "
+        f"' ' || replace({pair}, ' ', '') || ' ')"
+    )
+
+
+def _pair_counts(sp: DataFrame) -> DataFrame:
+    """(pair, n): adjacent-symbol pairs of the spaced strings ``s``,
+    counted over word types weighted by ``wn``."""
+    pair_arr = F.expr(
+        "transform(sequence(1, greatest("
+        "size(split(trim(s), '  ')) - 1, 1)), "
+        "i -> concat(element_at(split(trim(s), '  '), i), ' ', "
+        "element_at(split(trim(s), '  '), i + 1)))"
+    )
+    return (
+        sp.filter(F.size(_symbols(F.col("s"))) >= 2)
+        .select(F.explode(pair_arr).alias("pair"), "wn")
+        .groupBy("pair")
+        .agg(F.sum("wn").cast("long").alias("n"))
+    )
+
+
+def _pair_cte_sql(k: int, src: str) -> str:
+    """Oracle form of ``_pair_counts`` before the aggregate: CTE
+    ``p{k}`` of (wn, pair) rows exploded from ``src``."""
     return (
         f"p{k} AS (SELECT wn, unnest(list_transform("
         "range(1, greatest(len(string_split(trim(s), '  ')) - 1, 0) + 1),"
@@ -1590,118 +1577,126 @@ def _bpe_pair_cte(k: int, src: str) -> str:
     )
 
 
-def _bpe_train_sql(n: int) -> str:
-    """Generate the n-round merge-chain oracle — the hand-written
-    train3 SQL produced by a loop. Every intermediate is
-    AS MATERIALIZED (the graph_k_core rule): DuckDB otherwise inlines
-    each round's CTE into BOTH its downstream references and the
-    chain re-derives 2^n times."""
+def _merge_train(
+    spark: SparkSession,
+    sf_dir: str,
+    n_rounds: int,
+    rank: Callable[[DataFrame, DataFrame], DataFrame],
+) -> DataFrame:
+    """The tokenizer merge-training loop, for BPE and WordPiece: per
+    round, count adjacent symbol pairs, collect the top row of
+    ``rank(sp, pairs)`` — the algorithm's argmax over the (pair, n)
+    counts — and rewrite every word type with that merge as literal
+    patterns. The pick is one bounded row, so the merge table comes
+    back as a literal relation: no action re-runs a round.
+
+    Each rewritten frame is cut with ``localCheckpoint``: the next
+    round's jobs (one pick; WordPiece's score join reads the frame a
+    second time for symbol counts) then read the stored symbol
+    strings instead of re-running the word-count shuffle and every
+    earlier rewrite (depth 8 at sf0.1 on 4 cores: 1.8–2.0 s with the
+    cut, 6.6–7.0 s without). A round with no pair left ends training — the
+    oracle's cross join with an empty pick empties every later round.
+
+    Columns: ``step, merged`` then ``rank``'s columns after ``pair``.
+    """
+    wc = _word_counts(load(spark, "documents", sf_dir))
+    sp = wc.select(_spaced(F.col("w")).alias("s"), "wn")
+    rows: list[tuple] = []
+    for step in range(1, n_rounds + 1):
+        ranked = rank(sp, _pair_counts(sp))
+        top = ranked.limit(1).collect()
+        if not top:
+            break
+        rows.append((step, *top[0]))
+        if step < n_rounds:
+            sp = sp.select(
+                _merge(F.col("s"), top[0]["pair"]).alias("s"), "wn"
+            ).localCheckpoint(eager=False)
+    more = "".join(f", {c} long" for c in ranked.columns[1:])
+    return literal_df(spark, rows, "step long, merged string" + more)
+
+
+def _merge_train_sql(
+    n_rounds: int, rank_sql: Callable[[int], list[str]]
+) -> str:
+    """The loop's oracle: one sp/p/t CTE chain per round.
+    ``rank_sql(k)`` gives the CTEs that pick round k's pair from
+    ``p{k}`` (and ``sp{k-1}``); the last is ``t{k}``, one row (pair,
+    n, …). Every intermediate is AS MATERIALIZED (the graph_k_core
+    rule): DuckDB otherwise inlines each round's CTE into BOTH its
+    downstream references and the chain re-derives 2^n times."""
     ctes = [
         _BPE_WC_SQL,
-        "sp0 AS MATERIALIZED (SELECT ' ' || "
-        "trim(regexp_replace(w, '(.)', '\\1  ', 'g')) || ' ' AS s, wn "
-        "FROM wc)",
+        f"sp0 AS MATERIALIZED (SELECT {_SPACED_SQL} AS s, wn FROM wc)",
     ]
-    for k in range(1, n + 1):
-        ctes.append(_bpe_pair_cte(k, f"sp{k - 1}"))
-        mat = " MATERIALIZED" if k < n else ""
-        ctes.append(
-            f"t{k} AS{mat} (SELECT pair, CAST(SUM(wn) AS BIGINT) AS n "
-            f"FROM p{k} GROUP BY pair ORDER BY n DESC, pair LIMIT 1)"
-        )
-        if k < n:
+    for k in range(1, n_rounds + 1):
+        ctes += [_pair_cte_sql(k, f"sp{k - 1}"), *rank_sql(k)]
+        if k < n_rounds:
             ctes.append(
                 f"sp{k} AS MATERIALIZED (SELECT "
-                f"replace(s, ' ' || replace(t{k}.pair, ' ', '  ') || ' ',"
-                f" ' ' || replace(t{k}.pair, ' ', '') || ' ') AS s, wn "
+                f"{_merge_sql('s', f't{k}.pair')} AS s, wn "
                 f"FROM sp{k - 1}, t{k})"
             )
     union = " UNION ALL ".join(
-        (
-            f"SELECT CAST({k} AS BIGINT) AS step, pair AS merged, n "
-            f"FROM t{k}"
-            if k == 1
-            else f"SELECT CAST({k} AS BIGINT), pair, n FROM t{k}"
-        )
-        for k in range(1, n + 1)
+        f"SELECT CAST({k} AS BIGINT) AS step, pair AS merged, "
+        f"* EXCLUDE (pair) FROM t{k}"
+        for k in range(1, n_rounds + 1)
     )
     return "WITH " + ", ".join(ctes) + " " + union
 
 
-def _bpe_train(spark: SparkSession, sf_dir: str, n_rounds: int) -> DataFrame:
-    """Depth-general BPE training loop (shared by train3/train8 and
-    any future depth): one pair-count argmax + one sentinel-safe
-    rewrite per round, ``localCheckpoint`` between rounds so the plan
-    stays LINEAR in n (the symbol frame is referenced twice per round
-    — argmax and rewrite — so without truncation the tree doubles)."""
-    wc = _word_counts(load(spark, "documents", sf_dir))
-    sp = wc.select(
-        F.concat(
-            F.lit(" "),
-            F.trim(F.regexp_replace(F.col("w"), "(.)", "$1  ")),
-            F.lit(" "),
-        ).alias("s"),
-        "wn",
-    )
-    pair_arr = F.expr(
-        "transform(sequence(1, greatest("
-        "size(split(trim(s), '  ')) - 1, 1)), "
-        "i -> concat(element_at(split(trim(s), '  '), i), ' ', "
-        "element_at(split(trim(s), '  '), i + 1)))"
-    )
-    # r10: the per-round argmax is ONE bounded row — collect it, so
-    # (a) each round is one TakeOrdered job (the top1 subtree used to
-    # execute twice: once in the output branch, once broadcast into
-    # the rewrite), (b) the rewrite uses literal pattern strings, and
-    # (c) the merge table is a pure literal relation (the unioned
-    # top1 branches re-ran all n pair aggregates on EVERY action).
-    # An empty round leaves every later round empty in the crossJoin
-    # form — reproduced by the break.
-    steps_rows: list[tuple] = []
-    for step in range(1, n_rounds + 1):
-        pairs = sp.filter(
-            F.size(F.split(F.trim("s"), "  ")) >= 2
-        ).select(F.explode(pair_arr).alias("pair"), "wn")
-        top = (
-            pairs.groupBy("pair")
-            .agg(F.sum("wn").cast("long").alias("n"))
-            .orderBy(F.desc("n"), "pair")
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        pair_v, n_v = top[0]["pair"], top[0]["n"]
-        steps_rows.append((step, pair_v, n_v))
-        if step < n_rounds:
-            pat = " " + pair_v.replace(" ", "  ") + " "
-            rep = " " + pair_v.replace(" ", "") + " "
-            sp = sp.select(
-                F.replace(F.col("s"), F.lit(pat), F.lit(rep)).alias(
-                    "s"
-                ),
-                "wn",
-            ).localCheckpoint(eager=False)
-    return literal_df(
-        spark, steps_rows, "step long, merged string, n long"
-    )
+def _bpe_rank(sp: DataFrame, pairs: DataFrame) -> DataFrame:
+    """BPE's argmax: the most frequent pair, ties → pair asc."""
+    return pairs.orderBy(F.desc("n"), "pair")
+
+
+def _bpe_rank_sql(k: int) -> list[str]:
+    return [
+        f"t{k} AS MATERIALIZED (SELECT pair, CAST(SUM(wn) AS BIGINT) AS n "
+        f"FROM p{k} GROUP BY pair ORDER BY n DESC, pair LIMIT 1)"
+    ]
+
+
+_BPE_TRAIN_N = 8
+
+
+@register(
+    "text_bpe_train3",
+    _merge_train_sql(3, _bpe_rank_sql),
+    doc="BPE tokenizer training, 3 full iterations in-engine: the "
+    "ordered merge table (step, merged pair, frequency at selection "
+    "time) — mixed-width symbols round 2+, boundary-safe rewrite "
+    "(double-space separators + sentinels so a merged token can never "
+    "match the tail of a longer symbol)",
+)
+def text_bpe_train3(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Three BPE training iterations (Sennrich et al. 2016), the loop
+    the single-step ops unroll, run by ``_merge_train`` with the
+    count argmax (n desc, pair asc): mixed-width symbols from round 2
+    on, the boundary-safe rewrite described above this section.
+
+    Scale: all state is word TYPES (Zipf-bounded) × a ≤3-row merge
+    table; pair counting is one map-side-combined aggregate per round.
+    Real BPE training (k≈30000 merges) runs this exact shape with the
+    merge table growing by one row per round.
+    """
+    return _merge_train(spark, sf_dir, 3, _bpe_rank)
 
 
 @register(
     "text_bpe_train8",
-    _bpe_train_sql(_BPE_TRAIN_N),
+    _merge_train_sql(_BPE_TRAIN_N, _bpe_rank_sql),
     doc=f"BPE tokenizer training, {_BPE_TRAIN_N} full iterations "
     "in-engine via the depth-general loop (VERDICT r6 item 6): the "
-    "ordered merge table at depth 8, per-round localCheckpoint / "
-    "AS MATERIALIZED keeping plan size linear in depth",
+    "ordered merge table at depth 8; each round reads its "
+    "predecessor's stored symbol strings (localCheckpoint / "
+    "AS MATERIALIZED), so no round re-derives earlier ones",
 )
 def text_bpe_train8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Eight BPE training iterations — ``text_bpe_train3`` lifted to
-    arbitrary depth (``_bpe_train``). The semantics per round are
-    identical (sentinel-wrapped double-space symbol strings, leftmost
-    non-overlapping greedy merge, n-desc/pair-asc tie-break); what
-    this op adds is the DEPTH contract: each round cuts lineage with
-    ``localCheckpoint`` (Spark) / ``AS MATERIALIZED`` (oracle), so
+    """Eight BPE training iterations — ``text_bpe_train3`` at depth
+    8 through the same loop (``_merge_train``). The semantics per
+    round are identical; what this op adds is the DEPTH contract:
     plan node count and oracle CTE count grow LINEARLY in the round
     count — tests/test_bpe_depth.py pins linearity and proves the
     8-round merge table's first 3 rows equal text_bpe_train3.
@@ -1711,56 +1706,24 @@ def text_bpe_train8(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges) runs this exact loop. SCALE.md records the measured plan
     growth at depth 8.
     """
-    return _bpe_train(spark, sf_dir, _BPE_TRAIN_N)
+    return _merge_train(spark, sf_dir, _BPE_TRAIN_N, _bpe_rank)
 
 
-# shared CTE: the train3 merge chain with the word carried through, so
-# the encode op can map every word type to its final symbol count
-_BPE_CHAIN_W_SQL = f"""
-    sp0 AS MATERIALIZED (
-      SELECT w, ' ' || trim(regexp_replace(w, '(.)', '\\1  ', 'g')) || ' '
-               AS s, wn FROM wc),
-    p1 AS (SELECT wn, unnest(list_transform(
-             range(1, greatest(len(string_split(trim(s), '  ')) - 1, 0) + 1),
-             i -> string_split(trim(s), '  ')[CAST(i AS INT)] || ' ' ||
-                  string_split(trim(s), '  ')[CAST(i AS INT) + 1])) AS pair
-           FROM sp0),
-    t1 AS MATERIALIZED (SELECT pair FROM (SELECT pair, SUM(wn) AS n
-      FROM p1 GROUP BY pair ORDER BY n DESC, pair LIMIT 1)),
-    sp1 AS MATERIALIZED (
-      SELECT w, replace(s, ' ' || replace(t1.pair, ' ', '  ') || ' ',
-                        ' ' || replace(t1.pair, ' ', '') || ' ') AS s, wn
-      FROM sp0, t1),
-    p2 AS (SELECT wn, unnest(list_transform(
-             range(1, greatest(len(string_split(trim(s), '  ')) - 1, 0) + 1),
-             i -> string_split(trim(s), '  ')[CAST(i AS INT)] || ' ' ||
-                  string_split(trim(s), '  ')[CAST(i AS INT) + 1])) AS pair
-           FROM sp1),
-    t2 AS MATERIALIZED (SELECT pair FROM (SELECT pair, SUM(wn) AS n
-      FROM p2 GROUP BY pair ORDER BY n DESC, pair LIMIT 1)),
-    sp2 AS MATERIALIZED (
-      SELECT w, replace(s, ' ' || replace(t2.pair, ' ', '  ') || ' ',
-                        ' ' || replace(t2.pair, ' ', '') || ' ') AS s, wn
-      FROM sp1, t2),
-    p3 AS (SELECT wn, unnest(list_transform(
-             range(1, greatest(len(string_split(trim(s), '  ')) - 1, 0) + 1),
-             i -> string_split(trim(s), '  ')[CAST(i AS INT)] || ' ' ||
-                  string_split(trim(s), '  ')[CAST(i AS INT) + 1])) AS pair
-           FROM sp2),
-    t3 AS MATERIALIZED (SELECT pair FROM (SELECT pair, SUM(wn) AS n
-      FROM p3 GROUP BY pair ORDER BY n DESC, pair LIMIT 1)),
-    sp3 AS (
-      SELECT w, replace(s, ' ' || replace(t3.pair, ' ', '  ') || ' ',
-                        ' ' || replace(t3.pair, ' ', '') || ' ') AS s, wn
-      FROM sp2, t3)
-"""
+# a word's spaced string after text_bpe_train3's merges, in step order
+_BPE_ENC_SQL = reduce(
+    _merge_sql, ("m1.merged", "m2.merged", "m3.merged"), _SPACED_SQL
+)
 
 
 @register(
     "text_bpe_encode",
     f"""
-    WITH {_BPE_WC_SQL}, {_BPE_CHAIN_W_SQL},
-    enc AS (SELECT w, len(string_split(trim(s), '  ')) AS n_syms FROM sp3),
+    WITH {_BPE_WC_SQL},
+    btr AS MATERIALIZED ({_merge_train_sql(3, _bpe_rank_sql)}),
+    enc AS (SELECT w, len(string_split(trim({_BPE_ENC_SQL}), '  '))
+              AS n_syms
+            FROM wc, btr m1, btr m2, btr m3
+            WHERE m1.step = 1 AND m2.step = 2 AND m3.step = 3),
     wl AS (SELECT lang, unnest(string_split({_NORM_DUCK}, ' ')) AS w
            FROM documents),
     wlc AS (SELECT lang, w, COUNT(*) AS wnl FROM wl
@@ -1774,72 +1737,43 @@ _BPE_CHAIN_W_SQL = f"""
     FROM wlc JOIN enc ON wlc.w = enc.w
     GROUP BY lang
     """,
-    doc="BPE encode step: apply the 3 learned merges to every word "
-    "type, then per-language tokenization stats — char-level vs BPE "
-    "token counts and the integer-ppm compression the merges buy; the "
-    "encode side of the tokenizer-training loop",
+    doc="BPE encode step: apply text_bpe_train3's 3 learned merges "
+    "(derived by reference) to every word type, then per-language "
+    "tokenization stats — char-level vs BPE token counts and the "
+    "integer-ppm compression the merges buy; the encode side of the "
+    "tokenizer-training loop",
 )
 def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer ENCODE audited per language: train the 3-merge table
-    on global word-type counts (identical chain to text_bpe_train3),
-    map each word type to its final symbol count, and join that
-    encoding onto per-language word counts. Output: words, char-level
-    tokens, BPE tokens, and saved_ppm — the compression/fertility
-    readout a tokenizer-training loop monitors per language (merges
-    trained on a global corpus compress languages unevenly; this op
-    is the audit that shows it).
+    """Tokenizer ENCODE audited per language: take the 3-merge table
+    BY REFERENCE (Spark collects the registered memoized
+    ``text_bpe_train3``; the oracle embeds its registered SQL), apply
+    the merges in step order to every word type as literal rewrites,
+    and join each word type's final symbol count onto per-language
+    word counts. Output: words, char-level tokens, BPE tokens, and
+    saved_ppm — the compression/fertility readout a tokenizer-training
+    loop monitors per language (merges trained on a global corpus
+    compress languages unevenly; this op is the audit that shows it).
+    A training run that stopped before 3 merges encodes nothing: the
+    oracle cross-joins steps 1–3, so both sides return 0 rows.
 
-    Scale: the merge chain runs over global word TYPES; the encode
-    join is word-type × language (Zipf-bounded both sides) and the
-    final aggregate is map-side combined to |langs| rows. Products
-    route through SUM-then-multiply ppm with // (HUGEINT in DuckDB,
-    decimal(38,0) on Spark) — overflow-safe at corpus scale.
+    Scale: the merges are 3 literal string rewrites per word TYPE;
+    the encode join is word-type × language (Zipf-bounded both sides)
+    and the final aggregate is map-side combined to |langs| rows.
+    Products route through SUM-then-multiply ppm with // (HUGEINT in
+    DuckDB, decimal(38,0) on Spark) — overflow-safe at corpus scale.
     """
-    wc = _word_counts(load(spark, "documents", sf_dir))
-    sp = wc.select(
-        "w",
-        F.concat(
-            F.lit(" "),
-            F.trim(F.regexp_replace(F.col("w"), "(.)", "$1  ")),
-            F.lit(" "),
-        ).alias("s"),
-        "wn",
-    )
-    pair_arr = F.expr(
-        "transform(sequence(1, greatest("
-        "size(split(trim(s), '  ')) - 1, 1)), "
-        "i -> concat(element_at(split(trim(s), '  '), i), ' ', "
-        "element_at(split(trim(s), '  '), i + 1)))"
-    )
-    for _step in range(3):
-        pairs = (
-            sp.filter(F.size(F.split(F.trim("s"), "  ")) >= 2)
-            .select(F.explode(pair_arr).alias("pair"), "wn")
-        )
-        top1 = (
-            pairs.groupBy("pair")
-            .agg(F.sum("wn").alias("n"))
-            .orderBy(F.desc("n"), "pair")
-            .limit(1)
-            .select("pair")
-        )
-        sp = (
-            sp.crossJoin(F.broadcast(top1))
-            .select(
-                "w",
-                F.expr(
-                    "replace(s, "
-                    "concat(' ', replace(pair, ' ', '  '), ' '), "
-                    "concat(' ', replace(pair, ' ', ''), ' '))"
-                ).alias("s"),
-                "wn",
-            )
-            .localCheckpoint(eager=False)
-        )
-    enc = sp.select(
-        "w", F.size(F.split(F.trim("s"), "  ")).alias("n_syms")
-    )
+    merges = [
+        r["merged"] for r in sorted(text_bpe_train3(spark, sf_dir).collect())
+    ]
     docs = load(spark, "documents", sf_dir)
+    enc = _word_counts(docs).select(
+        "w",
+        F.size(_symbols(reduce(_merge, merges, _spaced(F.col("w"))))).alias(
+            "n_syms"
+        ),
+    )
+    if len(merges) < 3:
+        enc = enc.limit(0)
     wlc = (
         docs.select("lang", F.explode(_tokens(F.expr(_NORM))).alias("w"))
         .filter(F.length("w") >= 2)
@@ -2343,8 +2277,8 @@ def text_unigram_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # likelihood gain score(a,b) = count(ab) / (count(a)·count(b)) instead
 # of the raw pair count — frequent pairs of already-frequent symbols
 # lose to rarer-but-cohesive pairs. Everything else (word-type state,
-# leftmost greedy rewrite, per-round lineage cuts) is the BPE loop, so
-# this op completes the in-engine tokenizer-training triad:
+# leftmost greedy rewrite, per-round lineage cuts) is ``_merge_train``,
+# so this op completes the in-engine tokenizer-training triad:
 # text_bpe_trainN (count argmax), text_unigram_viterbi (SentencePiece
 # E-step), text_wordpiece_train4 (likelihood-ratio argmax).
 
@@ -2352,63 +2286,64 @@ _WP_TRAIN_N = 4
 _WP_SCALE = 1_000_000_000_000  # 1e12 score quantization grid
 
 
-def _wp_train_sql(n: int) -> str:
-    """Generated n-round WordPiece oracle: per round, symbol counts +
-    pair counts from the same spaced-symbol frame, the scored argmax
-    (floor(pn·1e12 / (sn_a·sn_b)) in HUGEINT, ties → higher pn, then
-    pair asc), then the BPE rewrite. AS MATERIALIZED everywhere a CTE
-    is referenced twice (the graph_k_core rule)."""
-    ctes = [
-        _BPE_WC_SQL,
-        "sp0 AS MATERIALIZED (SELECT ' ' || "
-        "trim(regexp_replace(w, '(.)', '\\1  ', 'g')) || ' ' AS s, wn "
-        "FROM wc)",
-    ]
-    for k in range(1, n + 1):
-        src = f"sp{k - 1}"
-        ctes.append(
-            f"sy{k} AS MATERIALIZED (SELECT sym, SUM(wn) AS sn FROM "
-            f"(SELECT wn, unnest(string_split(trim(s), '  ')) AS sym "
-            f"FROM {src}) GROUP BY sym)"
-        )
-        ctes.append(_bpe_pair_cte(k, src).replace(f"p{k} AS", f"wp{k} AS"))
-        ctes.append(
-            f"pc{k} AS MATERIALIZED (SELECT pair, SUM(wn) AS pn "
-            f"FROM wp{k} GROUP BY pair)"
-        )
-        mat = " MATERIALIZED" if k < n else ""
-        ctes.append(
-            f"t{k} AS{mat} (SELECT pair, CAST(pn AS BIGINT) AS n, "
-            f"CAST(CAST(pn AS HUGEINT) * {_WP_SCALE} // "
-            f"(CAST(sa.sn AS HUGEINT) * CAST(sb.sn AS HUGEINT)) "
-            f"AS BIGINT) AS score_q "
-            f"FROM pc{k}, sy{k} sa, sy{k} sb "
-            f"WHERE sa.sym = string_split(pair, ' ')[1] "
-            f"AND sb.sym = string_split(pair, ' ')[2] "
-            f"ORDER BY score_q DESC, n DESC, pair LIMIT 1)"
-        )
-        if k < n:
-            ctes.append(
-                f"sp{k} AS MATERIALIZED (SELECT "
-                f"replace(s, ' ' || replace(t{k}.pair, ' ', '  ') || ' ',"
-                f" ' ' || replace(t{k}.pair, ' ', '') || ' ') AS s, wn "
-                f"FROM sp{k - 1}, t{k})"
-            )
-    union = " UNION ALL ".join(
-        (
-            f"SELECT CAST({k} AS BIGINT) AS step, pair AS merged, n, "
-            f"score_q FROM t{k}"
-            if k == 1
-            else f"SELECT CAST({k} AS BIGINT), pair, n, score_q FROM t{k}"
-        )
-        for k in range(1, n + 1)
+def _wp_rank(sp: DataFrame, pairs: DataFrame) -> DataFrame:
+    """WordPiece's argmax: score every pair by
+    floor(n·1e12 / (sn_a·sn_b)) against this round's symbol counts,
+    ties → higher n, then pair asc."""
+    syms = (
+        sp.select(F.explode(_symbols(F.col("s"))).alias("sym"), "wn")
+        .groupBy("sym")
+        .agg(F.sum("wn").cast("long").alias("sn"))
     )
-    return "WITH " + ", ".join(ctes) + " " + union
+    return (
+        pairs.withColumn("a", F.split("pair", " ").getItem(0))
+        .withColumn("b", F.split("pair", " ").getItem(1))
+        .join(
+            F.broadcast(syms.select(F.col("sym").alias("a"),
+                                    F.col("sn").alias("sa"))),
+            "a",
+        )
+        .join(
+            F.broadcast(syms.select(F.col("sym").alias("b"),
+                                    F.col("sn").alias("sb"))),
+            "b",
+        )
+        .select(
+            "pair",
+            "n",
+            F.expr(
+                f"cast((cast(n as decimal(38,0)) * {_WP_SCALE}) div "
+                "(cast(sa as decimal(38,0)) * cast(sb as decimal(38,0)))"
+                " as bigint)"
+            ).alias("score_q"),
+        )
+        .orderBy(F.desc("score_q"), F.desc("n"), "pair")
+    )
+
+
+def _wp_rank_sql(k: int) -> list[str]:
+    """Oracle form of ``_wp_rank``: the score product routes through
+    HUGEINT."""
+    return [
+        f"sy{k} AS MATERIALIZED (SELECT sym, SUM(wn) AS sn FROM "
+        f"(SELECT wn, unnest(string_split(trim(s), '  ')) AS sym "
+        f"FROM sp{k - 1}) GROUP BY sym)",
+        f"pc{k} AS MATERIALIZED (SELECT pair, SUM(wn) AS pn "
+        f"FROM p{k} GROUP BY pair)",
+        f"t{k} AS MATERIALIZED (SELECT pair, CAST(pn AS BIGINT) AS n, "
+        f"CAST(CAST(pn AS HUGEINT) * {_WP_SCALE} // "
+        f"(CAST(sa.sn AS HUGEINT) * CAST(sb.sn AS HUGEINT)) "
+        f"AS BIGINT) AS score_q "
+        f"FROM pc{k}, sy{k} sa, sy{k} sb "
+        f"WHERE sa.sym = string_split(pair, ' ')[1] "
+        f"AND sb.sym = string_split(pair, ' ')[2] "
+        f"ORDER BY score_q DESC, n DESC, pair LIMIT 1)",
+    ]
 
 
 @register(
     "text_wordpiece_train4",
-    _wp_train_sql(_WP_TRAIN_N),
+    _merge_train_sql(_WP_TRAIN_N, _wp_rank_sql),
     doc=f"WordPiece tokenizer training, {_WP_TRAIN_N} full iterations "
     "in-engine: the merge argmax maximizes the likelihood-gain score "
     "count(ab)·1e12 // (count(a)·count(b)) (HUGEINT/decimal(38,0), "
@@ -2417,16 +2352,16 @@ def _wp_train_sql(n: int) -> str:
     "text_bpe_trainN and text_unigram_viterbi",
 )
 def text_wordpiece_train4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WordPiece's likelihood-scored merge loop on the BPE machinery:
-    symbol state is the sentinel-wrapped double-space word-type frame
-    (so rewrites match whole adjacent symbols only — text_bpe_train3's
-    boundary-safety), and each round computes BOTH per-symbol counts
-    and adjacent-pair counts from it, scores every pair by
-    floor(pn·1e12 / (sn_a·sn_b)) — the integer form of the unigram-LM
-    likelihood gain p(ab)/(p(a)p(b)) up to the constant total count —
-    and merges the argmax. The 1e12 grid is the determinism
-    quantization; ties resolve by higher raw pair count then
-    lexicographic pair, identically in both engines (the score
+    """WordPiece's likelihood-scored merge loop: ``_merge_train`` with
+    the ``_wp_rank`` argmax. Symbol state is the BPE loop's
+    sentinel-wrapped double-space word-type frame (so rewrites match
+    whole adjacent symbols only), and each round computes BOTH
+    per-symbol counts and adjacent-pair counts from it, scores every
+    pair by floor(pn·1e12 / (sn_a·sn_b)) — the integer form of the
+    unigram-LM likelihood gain p(ab)/(p(a)p(b)) up to the constant
+    total count — and merges the argmax. The 1e12 grid is the
+    determinism quantization; ties resolve by higher raw pair count
+    then lexicographic pair, identically in both engines (the score
     product sn_a·sn_b routes through HUGEINT/decimal(38,0) — counts
     at corpus scale overflow int64 under the 1e12 scale-up).
 
@@ -2434,92 +2369,13 @@ def text_wordpiece_train4(spark: SparkSession, sf_dir: str) -> DataFrame:
     declared simplification: in this word-type representation the
     continuation mark only relabels inner symbols and never changes
     which merge wins. Encoding with a trained WordPiece vocab is
-    greedy longest-prefix — ``text_unigram_viterbi``'s DP with max
-    piece length instead of log-probs — and is exercised there.
+    greedy longest-prefix — ``text_wordpiece_encode``.
 
     Scale: identical to text_bpe_train8 — all state is word TYPES
     (Zipf-bounded) × symbol types; the score join touches pair types
-    against symbol types (both model-side, broadcast); one
-    localCheckpoint per round keeps the plan linear in depth.
+    against symbol types (both model-side, broadcast).
     """
-    wc = _word_counts(load(spark, "documents", sf_dir))
-    sp = wc.select(
-        F.concat(
-            F.lit(" "),
-            F.trim(F.regexp_replace(F.col("w"), "(.)", "$1  ")),
-            F.lit(" "),
-        ).alias("s"),
-        "wn",
-    )
-    pair_arr = F.expr(
-        "transform(sequence(1, greatest("
-        "size(split(trim(s), '  ')) - 1, 1)), "
-        "i -> concat(element_at(split(trim(s), '  '), i), ' ', "
-        "element_at(split(trim(s), '  '), i + 1)))"
-    )
-    steps_rows: list[tuple] = []
-    for step in range(1, _WP_TRAIN_N + 1):
-        syms = (
-            sp.select(
-                F.explode(F.split(F.trim("s"), "  ")).alias("sym"), "wn"
-            )
-            .groupBy("sym")
-            .agg(F.sum("wn").cast("long").alias("sn"))
-        )
-        pairs = (
-            sp.filter(F.size(F.split(F.trim("s"), "  ")) >= 2)
-            .select(F.explode(pair_arr).alias("pair"), "wn")
-            .groupBy("pair")
-            .agg(F.sum("wn").cast("long").alias("pn"))
-        )
-        scored = (
-            pairs.withColumn("a", F.split("pair", " ").getItem(0))
-            .withColumn("b", F.split("pair", " ").getItem(1))
-            .join(
-                F.broadcast(syms.select(F.col("sym").alias("a"),
-                                        F.col("sn").alias("sa"))),
-                "a",
-            )
-            .join(
-                F.broadcast(syms.select(F.col("sym").alias("b"),
-                                        F.col("sn").alias("sb"))),
-                "b",
-            )
-            .select(
-                "pair",
-                F.col("pn").alias("n"),
-                F.expr(
-                    f"cast((cast(pn as decimal(38,0)) * {_WP_SCALE}) div "
-                    "(cast(sa as decimal(38,0)) * cast(sb as decimal(38,0)))"
-                    " as bigint)"
-                ).alias("score_q"),
-            )
-        )
-        # r10: driver-collected bounded argmax + literal rewrite +
-        # literal merge table (the _bpe_train rationale)
-        top = scored.orderBy(
-            F.desc("score_q"), F.desc("n"), "pair"
-        ).limit(1).collect()
-        if not top:
-            break
-        pair_v = top[0]["pair"]
-        steps_rows.append(
-            (step, pair_v, top[0]["n"], top[0]["score_q"])
-        )
-        if step < _WP_TRAIN_N:
-            pat = " " + pair_v.replace(" ", "  ") + " "
-            rep = " " + pair_v.replace(" ", "") + " "
-            sp = sp.select(
-                F.replace(F.col("s"), F.lit(pat), F.lit(rep)).alias(
-                    "s"
-                ),
-                "wn",
-            ).localCheckpoint(eager=False)
-    return literal_df(
-        spark,
-        steps_rows,
-        "step long, merged string, n long, score_q long",
-    )
+    return _merge_train(spark, sf_dir, _WP_TRAIN_N, _wp_rank)
 
 
 # ---------- generation-eval metrics: ROUGE-N and BLEU ----------
@@ -2779,11 +2635,12 @@ def _wp_encode_sql() -> str:
     longest-prefix strip steps, each MATERIALIZED."""
     ctes = [
         _BPE_WC_SQL,
-        f"wtr AS MATERIALIZED ({_wp_train_sql(_WP_TRAIN_N)})",
+        f"wtr AS MATERIALIZED "
+        f"({_merge_train_sql(_WP_TRAIN_N, _wp_rank_sql)})",
         "wpv AS MATERIALIZED ("
         "SELECT DISTINCT piece FROM ("
-        "SELECT unnest(string_split(trim("
-        "regexp_replace(w, '(.)', '\\1  ', 'g')), '  ')) AS piece FROM wc"
+        f"SELECT unnest(string_split(trim({_SPACED_SQL}), '  ')) AS piece "
+        "FROM wc"
         " UNION ALL "
         "SELECT replace(merged, ' ', '') AS piece FROM wtr))",
         f"e0 AS (SELECT w, wn, w AS rest, '' AS enc, 0 AS np FROM wc "
@@ -2819,8 +2676,9 @@ def _wp_encode_sql() -> str:
     doc="WordPiece inference: greedy longest-match-first (max-munch) "
     "segmentation of every word type against the TRAINED vocab "
     "(corpus alphabet + text_wordpiece_train4's merges, derived by "
-    "reference) — per word: piece count and the '|'-joined encoding; "
-    f"{_WP_ENC_STEPS} unrolled strip steps, lineage cut per step",
+    f"reference) — per word of ≤ {_WP_ENC_STEPS} chars: piece count and "
+    "the '|'-joined encoding; one vectorized pass over the collected "
+    "merge pieces",
 )
 def text_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The inference half of WordPiece (BERT's runtime tokenizer):
@@ -2841,12 +2699,14 @@ def text_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefixes of one string are equal, and the vocab is distinct) —
     the ORDER BY carries one anyway for belt-and-braces determinism.
 
-    Scale: state is word TYPES × a broadcast vocab; each of the
-    8 steps is one broadcast prefix join + a per-word window, with
-    ``localCheckpoint`` keeping the plan linear in steps (the BPE
-    depth contract). Real vocabularies (30k pieces) replace the
-    prefix-predicate broadcast join with an equi-join on the
-    length-k prefix per candidate length — same loop shape.
+    Scale: state is word TYPES; the merge pieces are collected on the
+    driver (``_WP_TRAIN_N`` rows) and shipped in the closure of ONE
+    ``mapInPandas`` pass, whose per-word loop strips at most
+    ``_WP_ENC_STEPS`` pieces — no join, shuffle or lineage cut. The
+    oracle unrolls the same loop as ``_WP_ENC_STEPS`` materialized
+    prefix-join steps. Real vocabularies (30k pieces) replace the
+    linear piece scan with a lookup of the length-k prefix per
+    candidate length — same pass shape.
     """
     wc = _word_counts(load(spark, "documents", sf_dir))
     # trained merge pieces: BOUNDED (_WP_TRAIN_N rows) — collect them

@@ -12,7 +12,8 @@ import pandas as pd
 
 from cs_pipeline_spark.operators.text import (
     _WP_SCALE,
-    _wp_train_sql,
+    _merge_train_sql,
+    _wp_rank_sql,
     text_wordpiece_train4,
 )
 
@@ -59,7 +60,8 @@ def test_wordpiece_score_tiebreak_is_pair_count_then_lex(spark, tmp_path):
 
 
 def test_wordpiece_oracle_generation_linear():
-    s2, s4 = _wp_train_sql(2), _wp_train_sql(4)
+    s2 = _merge_train_sql(2, _wp_rank_sql)
+    s4 = _merge_train_sql(4, _wp_rank_sql)
     # one (sy, pc, t, sp) MATERIALIZED quad per non-final round
     assert s4.count("AS MATERIALIZED") - s2.count("AS MATERIALIZED") == 8
     assert len(s4) < len(s2) * 3
@@ -81,7 +83,9 @@ def test_wordpiece_matches_registered_oracle_on_testdata(spark, sf_dir):
     )
     want = {
         int(s): (m, int(n), int(q))
-        for s, m, n, q in con.execute(_wp_train_sql(4)).fetchall()
+        for s, m, n, q in con.execute(
+            _merge_train_sql(4, _wp_rank_sql)
+        ).fetchall()
     }
     assert got == want and len(got) == 4
 

@@ -366,12 +366,12 @@ AUDIT: dict[str, dict] = {
     "text_bpe_pair_stats": {"smj": 0},    # word-type agg, TakeOrdered top-N
     "text_bpe_merge_apply": {"smj": 0},   # argmax 1-row broadcast, no SMJ
     "emb_int8_calibrate": {"smj": 0},     # dim stats broadcast back to facts
-    "text_bpe_train3": {"smj": 0},        # 3 argmax rounds, 1-row broadcasts
+    "text_bpe_train3": {"smj": 0},        # 3 collected picks → literal merge table
     "win_hampel_filter": {"smj": 0, "exchange": 1},  # one series shuffle
     "analyze_join_cardinality": {},       # stats + audited join
     "train_dpo_pairs": {"smj": 0, "exchange": 1},  # one struct-argmax shuffle
     "emb_power_iteration": {"smj": 0, "exchange": 1},  # 64-row agg
-    "text_bpe_encode": {"smj": 0},        # word-type chain + lang join
+    "text_bpe_encode": {"smj": 0},        # literal merge rewrites + lang join
     "ml_kfold_nb_cv": {"smj": 1},         # argmax⋈fold-models: 5 folds × Zipf-bounded vocab
     "events_path_trigrams": {"smj": 0, "exchange": 2},  # user window + agg
     "ml_learning_curve": {"smj": 6},      # tier-spec(4)⋈bucket-counts: model-side rows only
@@ -464,7 +464,7 @@ AUDIT: dict[str, dict] = {
     # 1 NLJ = crossJoin(broadcast(1-row totals)); model is 256 rows
     "corpus_dsir_weights": {"smj": 0, "nlj": 1},
     "text_wordpiece_train4": {"smj": 0},  # model-side broadcast score join
-    "text_wordpiece_encode": {"smj": 0},  # broadcast prefix join per step
+    "text_wordpiece_encode": {"smj": 0},  # one mapInPandas pass, no join
     "mm_decode_gif_meta": {"smj": 0, "exchange": 0},
     "mm_decode_webp_meta": {"smj": 0, "exchange": 0},
     "mm_exif_gps": {"smj": 0, "exchange": 0},
